@@ -1621,7 +1621,7 @@ object PbQueries {
   }
 
   /** #11be (`pb_sql_optimistic`): SQL DML routed onto the optimistic
-    * twins by `TBLPROPERTIES('commit_mode'='optimistic')` — three
+    * write mode by `TBLPROPERTIES('commit_mode'='optimistic')` — three
     * threads run plain `UPDATE <catalog>.customer` statements over
     * disjoint key slices; each lowers onto
     * [[KeyedTable.updateConcurrent]] (rewrite staged outside the

@@ -50,8 +50,10 @@ case class GramUpperTriangle(
 
   override def nullable: Boolean = false
 
+  /** Cells are nullable: a cell whose exact sum overflows DECIMAL(38,12)
+    * is null (see [[eval]]), as the composed decimal `sum` would be. */
   override def dataType: DataType =
-    ArrayType(DecimalType(38, 12), containsNull = false)
+    ArrayType(DecimalType(38, 12), containsNull = true)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess

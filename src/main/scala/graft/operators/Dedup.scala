@@ -562,7 +562,18 @@ object Dedup {
     * composite unique keys, i.e. exactly the shape
     * [[graft.store.KeyedTable]] persists. Build once per corpus;
     * every future delta probes these instead of recomputing the
-    * reference corpus' signatures. */
+    * reference corpus' signatures.
+    *
+    * EAGER: the shared shingling is `localCheckpoint()`ed, so this call
+    * runs one job that materializes the whole shingled `seen` corpus
+    * before returning, and the returned frames read those checkpointed
+    * blocks. They are not recomputable: local checkpoint blocks live
+    * unreplicated on the executors that wrote them, so losing one of
+    * those executors before the frames are consumed fails the read
+    * (dynamic allocation releasing idle executors counts). Persist
+    * both frames promptly (the intended use, as keyed tables), or
+    * build them with executor decommissioning / shuffle-tracked
+    * retention if they must outlive executor churn. */
   def lshIndexTables(seen: DataFrame, idCol: String, textCol: String,
                      n: Int = 5, numHashes: Int = 16,
                      bands: Int = 4): (DataFrame, DataFrame) = {

@@ -663,8 +663,13 @@ object Knn {
     while (fi < dim) {
       var fj = fi
       while (fj < dim) {
-        G(fi)(fj) = flat(fk)
-        G(fj)(fi) = flat(fk) // Gram is symmetric; mirror the triangle
+        // a null cell (its sum overflowed DECIMAL(38,12)) stays ZERO:
+        // the matvec's SUM over G(i)(j)·v(j) skips NULL products, so
+        // the cell contributes nothing — the composed per-cell decimal
+        // `sum` form's semantics, never an NPE
+        val g = Option(flat(fk)).getOrElse(java.math.BigDecimal.ZERO)
+        G(fi)(fj) = g
+        G(fj)(fi) = g // Gram is symmetric; mirror the triangle
         fj += 1
         fk += 1
       }

@@ -311,8 +311,8 @@ case class GraftUpdateCommand(warehouse: String, table: String,
     if (sets.isEmpty) return Seq.empty // all-identity SET: a no-op
     val cond = condition.map(GraftSqlDml.byName).getOrElse(lit(true))
     val setMap = sets.map { case (c, e) => c -> GraftSqlDml.byName(e) }.toMap
-    // commit_mode=optimistic routes SQL UPDATE onto the bucket-level
-    // optimistic twin: the rewrite stages outside the write lock and a
+    // commit_mode=optimistic routes SQL UPDATE onto the write
+    // transaction's optimistic mode: the rewrite stages outside the write lock and a
     // racing disjoint-bucket statement commits right through it. An
     // overlapping-bucket conflict auto-retries (bounded by
     // spark.graft.sql.maxRetries) — each attempt re-stages against the
@@ -442,8 +442,8 @@ case class GraftMergeCommand(warehouse: String, table: String,
         }
       }
     // commit_mode=optimistic: the full-outer merge stages outside the
-    // write lock; the pinned routing version transfers to the twin's
-    // snapshot-at-start guard, and the bucket-window flip covers the
+    // write lock; the pinned routing version transfers to the
+    // transaction's pin guard, and the bucket-window flip covers the
     // rest (feed rows route by their own PK, whose bucket is touched)
     if (TableMeta.read(spark,
         KeyedTable.tableDir(warehouse, table)).optimisticDml)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Parallel.inParallel
+
 /** How to write into an existing table — mirrors the reference's
   * `how` parameter (/root/reference/pandabase/sql.py:61-70). */
 sealed trait WriteMode
@@ -56,10 +58,15 @@ object DeleteMode {
   * which also gives bounded time travel ([[readSql]] `asOfVersion`).
   * PK range reads push down to parquet row-group min/max stats.
   *
-  * Writers additionally serialize through [[WriteLock]] (`_graft_lock`,
-  * atomic create-if-absent): each commit is atomic but the
-  * read-merge-commit SEQUENCE is not, so two concurrent mutators of the
-  * same table fail fast instead of interleaving. Readers never take
+  * Every row mutation is ONE write transaction ([[WriteTxn]]): pin a
+  * snapshot, stage against it, validate against what changed since the
+  * pin, flip the manifest under [[WriteLock]] (`_graft_lock`, atomic
+  * create-if-absent). Each commit is atomic but the read-merge-commit
+  * SEQUENCE is not, so the transaction has two lock modes: LOCKED
+  * ([[toSql]], [[delete]], [[update]], [[merge]]) takes the lock before
+  * the pin — a concurrent mutator fails fast instead of interleaving —
+  * and OPTIMISTIC (the `*Concurrent` entry points) stages unlocked and
+  * takes the lock only for validation plus flip. Readers never take
   * the lock.
   */
 object KeyedTable {
@@ -223,20 +230,8 @@ object KeyedTable {
     }
     if (autoIndex && pk.nonEmpty)
       throw new StoreException("pass either pk or autoIndex=true, not both")
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
-          "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)")
-    }
-
-    // clean column names (reference silently cleans; helpers.py:228)
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
+    if (strictUtc) rejectNaive(df)
+    val cleaned = cleanColumns(df)
     val pkClean = pk.map(Names.cleanName)
     pkClean.foreach { k =>
       if (!cleaned.columns.contains(k))
@@ -287,9 +282,10 @@ object KeyedTable {
               s"Table $tableName already exists; how=CreateOnly (reference: sql.py:171)")
           case WriteMode.Append =>
             append(cleaned, wh, tableName, addNewColumns, validate, changelog,
-              txn)
+              txn, "append", None)
           case WriteMode.Upsert =>
-            upsert(cleaned, wh, tableName, addNewColumns, validate, changelog)
+            upsert(cleaned, wh, tableName, addNewColumns, validate, changelog,
+              "upsert", None)
             ()
         }
       }
@@ -330,30 +326,6 @@ object KeyedTable {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(prev)
-  }
-
-  /** Run two INDEPENDENT pieces of driver code — each typically one
-    * Spark action — concurrently (optimization guide §2.6: a verb's
-    * sequential actions leave the cluster idle through each job's tail
-    * and each scheduling wave; overlapping them hides both). A fresh
-    * thread per call so Spark's inheritable thread-locals (job
-    * description/group) propagate. Error precedence matches the old
-    * sequential order: `a`'s failure wins when both fail. */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    @volatile var ra: Either[Throwable, A] = null
-    val t = new Thread(() => {
-      ra = try Right(a) catch { case e: Throwable => Left(e) }
-    }, "graft-parallel-action")
-    t.setDaemon(true)
-    t.start()
-    val rb = try Right(b) catch { case e: Throwable => Left(e) }
-    t.join()
-    (ra, rb) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(ea), Left(eb)) => ea.addSuppressed(eb); throw ea
-      case (Left(ea), _) => throw ea
-      case (_, Left(eb)) => throw eb
-    }
   }
 
   private def create(df0: DataFrame, warehouse: String, tableName: String,
@@ -515,9 +487,18 @@ object KeyedTable {
     * assume the input recomputes deterministically (same assumption
     * zipWithIndex made). Paid only on autoIndex writes. */
   private[store] def assignAutoIndex(df: DataFrame, offset: Long,
-                                     name: String = Names.AutoIndex): (DataFrame, Long) = {
+                                     name: String = Names.AutoIndex): (DataFrame, Long) =
+    assignAutoIndexWith(df, name)(_ => offset)
+
+  /** [[assignAutoIndex]] whose first id comes from `reserve`, called with
+    * the row count between the counting job and the id assignment — the
+    * append's id-range reservation slot. */
+  private def assignAutoIndexWith(df: DataFrame, name: String = Names.AutoIndex)
+                                 (reserve: Long => Long): (DataFrame, Long) = {
     val counts = df.select(spark_partition_id().as("p")).groupBy("p").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val n = counts.values.sum
+    val offset = reserve(n)
     val pids = counts.keys.toSeq.sorted
     val starts = pids.zip(pids.scanLeft(0L)((acc, p) => acc + counts(p)).init).toMap
     val partitionStart =
@@ -525,7 +506,7 @@ object KeyedTable {
       else element_at(typedlit(starts), spark_partition_id())
     val localRow = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1))
     val id = (lit(offset) + partitionStart + localRow).as(name)
-    (df.select(id +: df.columns.map(col).toIndexedSeq: _*), counts.values.sum)
+    (df.select(id +: df.columns.map(col).toIndexedSeq: _*), n)
   }
 
   /** Recover the auto-index high-water mark for a pre-`maxAutoIndex`
@@ -686,39 +667,31 @@ object KeyedTable {
       .filter(meta.schema.fieldNames.contains)
       .map(c => meta.physName(c) -> meta.schema(c).dataType)
 
-  /** Footer stats of every staged parquet file under `staging`,
-    * collected OUTSIDE the lock — the rename into the live bucket dirs
-    * preserves content, so [[commitStaged]] applies these verbatim via
-    * its `preStats` hook instead of re-opening O(staged files) footers
-    * inside the flip. Keyed by (bucket, staged file name). The
-    * optimistic maintenance paths (compact / zorder / rebucket) stage
-    * the WHOLE table at worst, which is exactly where in-lock footer
-    * IO would re-create the writer outage this round removed; the
-    * row verbs' flips shrink by their delta's footer IO too. Stats
+  /** Footer stats of every staged parquet file under `staging`, keyed by
+    * staged path and collected BEFORE the flip — the rename into the
+    * live bucket dirs preserves content, so [[commitFlip]] applies them
+    * verbatim instead of re-opening O(staged files) footers inside the
+    * lock. A maintenance rewrite (compact / zorder / rebucket) stages
+    * the WHOLE table at worst, exactly where in-lock footer IO would be
+    * a writer outage; row verbs' flips shrink by their delta's footer
+    * IO too. `cols = Nil` reads row counts only (DV sidecars). Stats
     * columns are pinned at STAGE time: a stat column registered
     * mid-window simply has no bounds on this commit's files (the
-    * standard files-before-the-column-joined contract — they are
-    * never pruned on it). */
+    * standard files-before-the-column-joined contract — they are never
+    * pruned on it). */
   private def stageFileStats(spark: SparkSession, f: FileSystem,
                              staging: String,
                              cols: Seq[(String, DataType)])
-      : Map[(Int, String), FileFooter] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+      : Map[Path, FileFooter] = {
     val root = new Path(staging)
     if (!f.exists(root)) Map.empty
-    else {
-      val byPath: Seq[((Int, String), Path)] = f.listStatus(root).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"$BucketCol="))
-        .flatMap { d =>
-          val b = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-          f.listStatus(d.getPath).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map(st => ((b, st.getPath.getName), st.getPath))
-        }
-      val stats = pkFileStatsAll(conf, byPath.map(_._2), cols)
-      byPath.map { case (k, p) => k -> stats(p) }.toMap
-    }
+    else pkFileStatsAll(spark.sparkContext.hadoopConfiguration,
+      f.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
+        .flatMap(d => f.listStatus(d.getPath).toSeq
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath)),
+      cols)
   }
 
   /** A column type whose min/max the manifest can store and compare
@@ -863,106 +836,98 @@ object KeyedTable {
         s"$op: data committed but changelog rename $src -> $dst failed")
   }
 
-  /** Commit a mutation's staged output as manifest version N+1 (see
-    * [[Manifest]] for the isolation argument). Staged files are renamed
-    * INTO their live bucket dirs under commit-unique names — additive
-    * and invisible, since no manifest references them — then the new
-    * manifest (untouched buckets carried over; touched buckets replaced
-    * by, or with `add` extended by, their staged files) is published in
-    * one atomic file rename, which IS the commit. Every rename is
-    * checked; any failure deletes the unreferenced moved-in files and
-    * aborts with the current snapshot — and every live file — untouched.
-    * Superseded files are left for [[vacuum]], so concurrent readers of
-    * the previous snapshot are never disturbed.
+  /** THE flip every commit shares — row mutations through [[WriteTxn]],
+    * layout maintenance, stream-sink epochs: publish staged output as
+    * manifest version N+1 (see [[Manifest]] for the isolation argument).
     *
-    * `removeMissing`: when true (predicate delete, rebucket), a touched
-    * bucket with no staged output is REMOVED from the new snapshot;
-    * when false, it is carried over unchanged.
+    *  - `staging`: staged DATA files are renamed INTO their live bucket
+    *    dirs under commit-unique names — additive and invisible, since
+    *    no manifest references them. A touched bucket's staged files
+    *    REPLACE its file list, or with `add` extend it; a touched bucket
+    *    with no staged output leaves the snapshot under `removeMissing`
+    *    (predicate delete, merge, rebucket) and carries over otherwise.
+    *  - `dvStaging`: staged DELETE-VECTOR sidecars (rows `(file, pos)`)
+    *    move in the same way under `-dv-` names and EXTEND their
+    *    bucket's DV list — the merge-on-read decomposition (a delete
+    *    stages only DVs; an update/merge also `add`s its post-images),
+    *    so both land in one flip and a reader sees either the full old
+    *    or the full new state.
     *
-    * `preStats`: footer stats PRE-COLLECTED from the staging files
-    * OUTSIDE the lock, keyed by (bucket, staged file name) — see
-    * [[stageFileStats]]. Rename never changes content, so they apply
-    * verbatim to the moved files. The optimistic MAINTENANCE paths
-    * must pass this: a zorder/rebucket stages the WHOLE table, and
-    * paying O(table) footer opens inside the flip would turn the
-    * "brief" lock hold back into a writer outage. Any file the map
-    * misses (raced staging edits — never happens from this code) is
-    * read at commit as before.
+    * Every rename is checked; any failure deletes the moved-in files and
+    * aborts with the current snapshot — and every live file — untouched
+    * (CommitFaultSpec). The new manifest is then published in one atomic
+    * file rename, which IS the commit; a failed flip rolls the moved
+    * files back too. Superseded files stay for [[vacuum]], so readers of
+    * the previous snapshot are never disturbed. Delete vectors of a
+    * bucket whose files this commit REPLACED are dropped — the rewrite
+    * read through the DV mask, so dropping them IS the materialization
+    * step; additive commits keep them.
     *
-    * GUARD RAIL for new mutation verbs: commitStaged runs INSIDE the
-    * locked flip — keep it metadata arithmetic plus renames. Collect
-    * footer stats before the lock via [[stageFileStats]]/`preStats`
-    * hooks; never re-open parquet footers in here. */
-  private def commitStaged(spark: SparkSession, f: FileSystem, dir: String,
-                           data: String, staging: String, touched: Seq[Int],
-                           op: String, base: Manifest, newBuckets: Int,
-                           meta: TableMeta,
-                           add: Boolean = false,
-                           removeMissing: Boolean = false,
-                           streamEpoch: Option[(String, Long)] = None,
-                           preStats: Option[Map[(Int, String),
-                             FileFooter]] = None)
+    * GUARD RAIL: this runs INSIDE the locked flip — keep it metadata
+    * arithmetic plus renames. Footer stats arrive in `preStats`,
+    * collected before the lock by [[stageFileStats]] and keyed by
+    * staged path (a rename never changes content); a file the map
+    * misses is read here only as a fallback. */
+  private def commitFlip(spark: SparkSession, f: FileSystem, dir: String,
+                         data: String, op: String, base: Manifest,
+                         meta: TableMeta, touched: Seq[Int],
+                         staging: Option[String],
+                         dvStaging: Option[String] = None,
+                         add: Boolean = false,
+                         removeMissing: Boolean = false,
+                         newBuckets: Option[Int] = None,
+                         streamEpoch: Option[(String, Long)] = None,
+                         preStats: Map[Path, FileFooter] = Map.empty)
       : Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
     val statCol = meta.pk.headOption
-    // leading PK first, then the configured extra stat columns — ONE
-    // footer block walk collects them all
-    val statColsTyped: Seq[(String, DataType)] = statColsTypedOf(meta)
     val commitId = UUID.randomUUID().toString.take(8)
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
     def abort(msg: String): Nothing = {
       moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
+      throw new StoreException(
+        s"$op: $msg; commit aborted, current snapshot unchanged")
     }
-    val movedByBucket: Map[Int, Seq[(Path, Long)]] = touched.flatMap { b =>
-      val sdir = new Path(staging, s"$BucketCol=$b")
-      if (!f.exists(sdir)) None
-      else {
-        val files = f.listStatus(sdir)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val tdir = new Path(data, s"$BucketCol=$b")
-        if (!f.mkdirs(tdir))
-          abort(s"$op: could not create bucket dir $tdir; " +
-            "commit aborted, current snapshot unchanged")
-        Some(b -> files.toSeq.map { st =>
-          val dst = new Path(tdir, s"$commitId-${st.getPath.getName}")
-          if (!f.rename(st.getPath, dst))
-            abort(s"$op: could not move staged file ${st.getPath} -> $dst; " +
-              "commit aborted, current snapshot unchanged")
-          moved += dst
-          (dst, st.getLen)
-        })
-      }
-    }.toMap
-    // ONE footer open per new file per commit — pooled, not serial —
-    // buys both the row count (COUNT(*)/row estimates become driver
-    // arithmetic) and the file-skipping stats range reads plan against.
-    // `preStats` entries (collected unlocked from the staging paths —
-    // renames preserve content) skip the in-lock read entirely.
-    def stagedNameOf(dst: Path): String =
-      dst.getName.stripPrefix(s"$commitId-")
-    val pre: Map[Path, FileFooter] =
-      preStats.fold(Map.empty[Path, FileFooter]) {
-        ps =>
-          movedByBucket.iterator.flatMap { case (b, fls) =>
-            fls.flatMap { case (dst, _) =>
-              ps.get((b, stagedNameOf(dst))).map(dst -> _)
-            }
-          }.toMap
-      }
-    val footer = pre ++ pkFileStatsAll(conf,
-      movedByBucket.valuesIterator.flatten.map(_._1)
-        .filterNot(pre.contains).toSeq, statColsTyped)
-    val staged: Map[Int, Seq[ManifestFile]] = movedByBucket.map {
-      case (b, fls) => b -> fls.map { case (dst, len) =>
-        val fstat = footer(dst)
-        ManifestFile(dst.getName, len, fstat.rows,
-          statCol.flatMap(fstat.cols.get),
-          statCol.fold(fstat.cols)(fstat.cols - _),
-          fstat.nulls)
-      }
+    // bucket -> (moved file, length, footer) for one staging root
+    def moveIn(root: Option[String], pfx: String,
+               cols: Seq[(String, DataType)])
+        : Map[Int, Seq[(Path, Long, FileFooter)]] = {
+      val byBucket = root.toSeq.flatMap(r => touched.flatMap { b =>
+        val sdir = new Path(r, s"$BucketCol=$b")
+        val files =
+          if (!f.exists(sdir)) Nil
+          else f.listStatus(sdir).toSeq
+            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+            .sortBy(_.getPath.getName)
+        if (files.isEmpty) None
+        else {
+          val tdir = new Path(data, s"$BucketCol=$b")
+          if (!f.mkdirs(tdir)) abort(s"could not create bucket dir $tdir")
+          Some(b -> files.map { st =>
+            val dst = new Path(tdir, s"$commitId-$pfx${st.getPath.getName}")
+            if (!f.rename(st.getPath, dst))
+              abort(s"could not move staged file ${st.getPath} -> $dst")
+            moved += dst
+            (st.getPath, dst, st.getLen)
+          })
+        }
+      })
+      val read = pkFileStatsAll(conf, byBucket.flatMap(_._2).collect {
+        case (src, dst, _) if !preStats.contains(src) => dst
+      }, cols)
+      byBucket.map { case (b, fls) => b -> fls.map { case (src, dst, len) =>
+        (dst, len, preStats.getOrElse(src, read(dst)))
+      }}.toMap
     }
+    val staged: Map[Int, Seq[ManifestFile]] =
+      moveIn(staging, "", statColsTypedOf(meta)).map { case (b, fls) =>
+        b -> fls.map { case (dst, len, st) =>
+          ManifestFile(dst.getName, len, st.rows,
+            statCol.flatMap(st.cols.get),
+            statCol.fold(st.cols)(st.cols - _), st.nulls)
+        }
+      }
+    val stagedDvs = moveIn(dvStaging, "dv-", Nil)
     val newFiles: Map[Int, Seq[ManifestFile]] =
       (base.files -- touched) ++ touched.flatMap { b =>
         staged.get(b) match {
@@ -972,83 +937,204 @@ object KeyedTable {
             if (removeMissing) None else base.files.get(b).map(b -> _)
         }
       }.toMap
-    // Delete vectors ride along per bucket — EXCEPT where this commit
-    // REPLACED the bucket's files (non-additive staging: upsert /
-    // update / CoW delete / compact / zorder / rebucket). Those
-    // rewrites read through the DV mask, so their output already
-    // excludes the tombstoned rows — dropping the DVs here IS the
-    // materialization step. Additive commits (append) keep them: the
-    // old files, and the tombstones against them, are still live.
     val newDvs: Map[Int, Seq[ManifestFile]] =
       base.dvs.filter { case (b, _) =>
-        val replaced = staged.contains(b) && !add
-        !replaced && newFiles.contains(b)
+        (add || !staged.contains(b)) && newFiles.contains(b)
+      } ++ stagedDvs.map { case (b, fls) =>
+        b -> (base.dvs.getOrElse(b, Nil) ++ fls.map { case (dst, len, st) =>
+          ManifestFile(dst.getName, len, st.rows)
+        })
       }
-    val mf = Manifest(base.version + 1, newBuckets, newFiles,
-      op = Some(op), dvs = newDvs,
-      // the streaming sink's epoch ledger rides in the SAME atomic
-      // flip as its data — exactly-once by construction
+    val mf = Manifest(base.version + 1, newBuckets.getOrElse(base.buckets),
+      newFiles, op = Some(op), dvs = newDvs,
+      // the streaming sink's epoch ledger (and append txn tokens) ride
+      // in the SAME atomic flip as the data — exactly-once by construction
       streams = base.streams ++ streamEpoch)
     try Manifest.commit(spark, dir, mf)
     catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
   }
 
-  /** Commit a MoR delete's staged DELETE-VECTOR files as manifest
-    * version N+1: the dual of [[commitStaged]] for tombstone sidecars.
-    * Staged DV parquet (rows `(file, pos)`, partitioned by bucket) is
-    * renamed INTO the live bucket dirs under commit-unique `-dv-`
-    * names — additive and invisible until the manifest flip, exactly
-    * the data-file protocol — and the new snapshot carries the SAME
-    * data files with the bucket's DV list extended. One footer open
-    * per DV file records its position count, keeping live-row
-    * arithmetic (COUNT(*), statistics, history) pure driver math.
-    * Any rename failure deletes the moved-in files and aborts with the
-    * current snapshot untouched (CommitFaultSpec contract). */
-  private def commitStagedDvs(spark: SparkSession, f: FileSystem, dir: String,
-                              data: String, staging: String,
-                              touched: Seq[Int], base: Manifest,
-                              op: String = "delete"): Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val commitId = UUID.randomUUID().toString.take(8)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    def abort(msg: String): Nothing = {
-      moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
+  /** The one write transaction every row mutation — append, upsert,
+    * merge, delete, update — runs as:
+    *  1. PIN a snapshot: [[TableMeta]] plus manifest (`meta`, `base`);
+    *  2. STAGE against it: data files, DV files, changelog images
+    *     ([[stageChangelog]]) and their footer stats ([[collectStats]]),
+    *     all before the flip;
+    *  3. VALIDATE against what changed since the pin — the verb's rule:
+    *     key-level overlap for append, the touched-bucket window
+    *     ([[windowCheck]]) for the rest;
+    *  4. FLIP under the write lock ([[commitFlip]]).
+    *
+    * Two lock modes, one code path:
+    *  - LOCKED (`waitMs = None`; [[toSql]], [[delete]], [[update]],
+    *    [[merge]]): the caller took the fail-fast [[WriteLock]] BEFORE
+    *    the pin, so nothing moves between pin and flip — [[flip]] hands
+    *    the pinned snapshot back, validation costs no IO and no job, and
+    *    the in-verb lock sections ([[underLock]]) are no-ops (the lock
+    *    is not re-entrant).
+    *  - OPTIMISTIC (`waitMs = Some(ms)`; the `*Concurrent` entry
+    *    points, SQL `commit_mode=optimistic`): pin and stage unlocked —
+    *    N writers overlap their staging jobs and serialize only on
+    *    flips; [[flip]] queues up to `ms` behind other committers,
+    *    re-reads the latest snapshot, and the verb's rule aborts with
+    *    [[ConcurrentWriteException]] (table unchanged, staging cleaned;
+    *    retry the call) when the window invalidates what was staged.
+    *    A pre-manifest legacy table has no snapshot to validate against
+    *    and runs locked instead ([[withTxn]]). */
+  private final class WriteTxn(val spark: SparkSession, val wh: String,
+                               val table: String, val op: String,
+                               waitMs: Option[Long]) {
+    val dir: String = tableDir(wh, table)
+    val data: String = dataDir(wh, table)
+    val f: FileSystem = fs(spark, dir)
+    val locked: Boolean = waitMs.isEmpty
+    /** The pinned meta; an auto-index id reservation advances it. */
+    var meta: TableMeta = TableMeta.read(spark, dir)
+    val base: Manifest = snapshotForWrite(spark, dir, data, meta)
+    private val cleanups = scala.collection.mutable.ArrayBuffer.empty[Path]
+    private var preStats = Map.empty[Path, FileFooter]
+
+    /** A fresh `.staging-<kind>-*` root, deleted when the txn ends (a
+      * no-op once its files moved in). */
+    def staging(kind: String): String = {
+      val p = new Path(dir, s".staging-$kind-${UUID.randomUUID()}")
+      cleanups += p
+      p.toString
     }
-    val movedByBucket: Map[Int, Seq[(Path, Long)]] = touched.flatMap { b =>
-      val sdir = new Path(staging, s"$BucketCol=$b")
-      if (!f.exists(sdir)) None
-      else {
-        val files = f.listStatus(sdir)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val tdir = new Path(data, s"$BucketCol=$b")
-        if (!f.exists(tdir))
-          abort(s"$op(mor): bucket dir $tdir vanished mid-commit; " +
-            "commit aborted, current snapshot unchanged")
-        Some(b -> files.toSeq.map { st =>
-          val dst = new Path(tdir, s"$commitId-dv-${st.getPath.getName}")
-          if (!f.rename(st.getPath, dst))
-            abort(s"$op(mor): could not move staged DV ${st.getPath} -> " +
-              s"$dst; commit aborted, current snapshot unchanged")
-          moved += dst
-          (dst, st.getLen)
-        })
+
+    /** Materialize a changelog batch while the pre-image is still the
+      * pinned snapshot; [[commitChangelog]] renames it into
+      * `_changelog/batch=<n>` only AFTER the data flip, so a mutation
+      * that fails mid-commit leaves no batch claiming changes that
+      * never landed. */
+    def stageChangelog(changes: DataFrame): Path = {
+      val p = staging("changelog")
+      changes.write.parquet(p)
+      new Path(p)
+    }
+
+    /** Footer stats of the staged data files (leading PK + stats
+      * columns, pinned at stage time) and DV files (row counts), read
+      * BEFORE the flip so the flip never opens a footer. */
+    def collectStats(staged: Option[String], dvs: Option[String] = None): Unit =
+      preStats = staged.fold(Map.empty[Path, FileFooter])(
+          stageFileStats(spark, f, _, statColsTypedOf(meta))) ++
+        dvs.fold(Map.empty[Path, FileFooter])(stageFileStats(spark, f, _, Nil))
+
+    /** A short in-verb critical section; a no-op wrapper when locked. */
+    def underLock[A](what: String)(body: => A): A = waitMs match {
+      case None => body
+      case Some(w) => WriteLock.withLockWait(spark, dir, s"$op($what)", w)(body)
+    }
+
+    /** VALIDATE + FLIP: `body` receives the (meta, manifest) to validate
+      * against and commit on — the pinned pair when locked, the latest
+      * when optimistic. `hook` is a test seam between stage and flip
+      * (optimistic mode only). */
+    def flip[A](hook: () => Unit = () => ())(
+        body: (TableMeta, Manifest) => A): A = {
+      if (!locked) hook()
+      underLock("commit") {
+        if (locked) body(meta, base)
+        else {
+          val m = TableMeta.read(spark, dir)
+          body(m, snapshotForWrite(spark, dir, data, m))
+        }
       }
-    }.toMap
-    val footer = pkFileStatsAll(conf,
-      movedByBucket.valuesIterator.flatten.map(_._1).toSeq, Nil)
-    val newDvs: Map[Int, Seq[ManifestFile]] =
-      base.dvs ++ movedByBucket.map { case (b, fls) =>
-        b -> (base.dvs.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          ManifestFile(dst.getName, len, footer(dst).rows)
-        })
-      }
-    val mf = Manifest(base.version + 1, base.buckets, base.files,
-      op = Some(op), dvs = newDvs, streams = base.streams)
-    try Manifest.commit(spark, dir, mf)
-    catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
+    }
+
+    def commit(metaL: TableMeta, baseL: Manifest, touched: Seq[Int],
+               staged: Option[String], dvs: Option[String] = None,
+               add: Boolean = false, removeMissing: Boolean = false,
+               newBuckets: Option[Int] = None,
+               streamEpoch: Option[(String, Long)] = None): Manifest =
+      commitFlip(spark, f, dir, data, op, baseL, metaL, touched, staged, dvs,
+        add, removeMissing, newBuckets, streamEpoch, preStats)
+
+    /** The changelog batch to land with this flip: the one staged beside
+      * the data or — when a writer ENABLED the changelog since the pin
+      * (never in the locked mode) — one staged now, before the data
+      * flip: every mutation of a CDC table must land a batch
+      * (readChangelog's invariant). */
+    def changelogAtFlip(staged: Option[Path], metaL: TableMeta)
+                       (images: => DataFrame): Option[Path] =
+      staged orElse (if (metaL.changelog) Some(stageChangelog(images)) else None)
+
+    def commitChangelog(src: Option[Path]): Unit =
+      src.foreach(p => commitChangelogBatch(f, op, p, nextChangelogDst(f, dir)))
+
+    def close(): Unit = cleanups.foreach(p => f.delete(p, true))
   }
+
+  /** Run `body` as a [[WriteTxn]] (see there for the two modes), with
+    * every staging root it created cleaned up afterwards. */
+  private def withTxn[A](spark: SparkSession, wh: String, table: String,
+                         op: String, waitMs: Option[Long])
+                        (body: WriteTxn => A): A = {
+    val t = new WriteTxn(spark, wh, table, op, waitMs)
+    if (!t.locked && t.base.version < 0)
+      // legacy table: no snapshot to validate against — the verb runs
+      // locked (adopting a manifest, so the NEXT call is optimistic)
+      WriteLock.withLockWait(spark, t.dir, s"$op(legacy)", waitMs.get)(
+        withTxn(spark, wh, table, op, None)(body))
+    else try body(t) finally t.close()
+  }
+
+  /** The touched-bucket conflict rule of every replace-shaped commit —
+    * upsert, merge, delete, update and layout maintenance — thrown as
+    * [[ConcurrentWriteException]] (`remedy` names what the caller does
+    * next; the table is unchanged):
+    *  - bucket count changed (a rebucket won the race — staged files use
+    *    the old layout);
+    *  - with `schemas` given (rewrites that republish whole buckets), ANY
+    *    schema change;
+    *  - a TOUCHED bucket whose live file or delete-vector set moved since
+    *    the pin — the staged rewrite read (and its commit would drop the
+    *    DVs of) a pre-image that is no longer the truth, and MoR position
+    *    ordinals are only valid against the exact files they indexed.
+    *    Buckets outside the touched set carry over untouched, so
+    *    disjoint-bucket writers both commit.
+    * In the locked mode the two snapshots are the same: nothing fires
+    * and nothing is read. */
+  private def windowCheck(base0: Manifest, baseLatest: Manifest,
+                          touched: Seq[Int], what: String, remedy: String,
+                          schemas: Option[(TableMeta, TableMeta)] = None): Unit = {
+    if (baseLatest.buckets != base0.buckets)
+      throw new ConcurrentWriteException(
+        s"bucket count changed ${base0.buckets} -> ${baseLatest.buckets} " +
+        s"(concurrent rebucket); $what staged files under the old layout — " +
+        remedy)
+    schemas.foreach { case (meta0, metaLatest) =>
+      if (metaLatest.schema != meta0.schema)
+        throw new ConcurrentWriteException(
+          s"table schema changed while $what staged (the rewrite " +
+          s"republished whole buckets under the old schema) — $remedy")
+    }
+    if (baseLatest.version != base0.version) {
+      def window(m: Manifest, b: Int): (Set[String], Set[String]) =
+        (m.files.getOrElse(b, Nil).map(_.name).toSet,
+          m.dvs.getOrElse(b, Nil).map(_.name).toSet)
+      val dirty = touched
+        .filter(b => window(base0, b) != window(baseLatest, b))
+      if (dirty.nonEmpty)
+        throw new ConcurrentWriteException(
+          s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
+          s"since $what staged (concurrent mutation with an overlapping " +
+          s"touched-bucket set) — $remedy")
+    }
+  }
+
+  /** Files `latest` holds in the `touched` buckets that `pinned` did
+    * not — all a KEY-level validation (append, append-mode stream
+    * epochs) must re-probe at the flip: a key live at commit time sits
+    * in a pinned file (probed while staging) or in an added one. */
+  private def filesAddedSince(pinned: Manifest, latest: Manifest,
+                              touched: Seq[Int]): Map[Int, Seq[ManifestFile]] =
+    touched.flatMap { b =>
+      val before = pinned.files.getOrElse(b, Nil).map(_.name).toSet
+      val now = latest.files.getOrElse(b, Nil).filterNot(x => before.contains(x.name))
+      if (now.isEmpty) None else Some(b -> now)
+    }.toMap
 
   /** Commit ONE streaming-sink epoch (see [[KeyedStreamingWrite]]) —
     * OPTIMISTICALLY, the [[appendConcurrent]] protocol: every
@@ -1214,7 +1300,9 @@ object KeyedTable {
       // sink is the highest-frequency committer — its flip must stay
       // a flip however large the epoch)
       val preStats = stageFileStats(spark, f, staging,
-        statColsTypedOf(meta0))
+        statColsTypedOf(meta0)) ++
+        Option(dvStaging0).fold(Map.empty[Path, FileFooter])(
+          stageFileStats(spark, f, _, Nil))
 
       StreamEpochHooks.betweenPhases()
 
@@ -1242,12 +1330,7 @@ object KeyedTable {
             if (windowMoved) {
               // re-check overlap against only the files ADDED since our
               // snapshot in the buckets we touch — usually none ⇒ no IO
-              val addedByBucket = touched.flatMap { b =>
-                val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
-                val now = baseL.files.getOrElse(b, Nil)
-                  .filterNot(x => before.contains(x.name))
-                if (now.isEmpty) None else Some(b -> now)
-              }.toMap
+              val addedByBucket = filesAddedSince(base0, baseL, touched)
               if (addedByBucket.nonEmpty) {
                 val addedDf = readRawWith(spark, wh, ref, metaL,
                   Some(baseL.copy(files = addedByBucket)))
@@ -1268,10 +1351,9 @@ object KeyedTable {
             val clSrc =
               clSrc0 orElse (if (metaL.changelog) Some(stageInsertImages())
                              else None)
-            commitStaged(spark, f, tblDir, data, staging, touched,
-              "stream", baseL, baseL.buckets, metaL, add = true,
-              streamEpoch = Some(queryId -> epochId),
-              preStats = Some(preStats))
+            commitFlip(spark, f, tblDir, data, "stream", baseL, metaL,
+              touched, Some(staging), add = true,
+              streamEpoch = Some(queryId -> epochId), preStats = preStats)
             clSrc.foreach(src =>
               commitChangelogBatch(f, "stream", src,
                 nextChangelogDst(f, tblDir)))
@@ -1291,10 +1373,9 @@ object KeyedTable {
               if (liveSetMoved || (metaL.changelog && clSrc0.isEmpty))
                 deriveUpsert(baseL, metaL)
               else (clSrc0, dvStaging0)
-            commitStagedMorMut(spark, f, tblDir, data, staging, dvStaging,
-              touched, "stream-upsert", baseL, metaL,
-              streamEpoch = Some(queryId -> epochId),
-              preStats = Some(preStats))
+            commitFlip(spark, f, tblDir, data, "stream-upsert", baseL, metaL,
+              touched, Some(staging), Some(dvStaging), add = true,
+              streamEpoch = Some(queryId -> epochId), preStats = preStats)
             clSrc.foreach(src =>
               commitChangelogBatch(f, "stream-upsert", src,
                 nextChangelogDst(f, tblDir)))
@@ -1382,103 +1463,6 @@ object KeyedTable {
           }
       }
     }
-
-  /** Commit a merge-on-read UPDATE/MERGE: the staged POST-IMAGE data
-    * files EXTEND the touched buckets' file lists (additive, the
-    * append protocol) while the staged DELETE-VECTOR sidecars
-    * tombstone the matched rows' old positions — both in ONE manifest
-    * flip, so a reader sees either the full old state or the full new
-    * state. This is the Iceberg-v2 decomposition of UPDATE/MERGE:
-    * write cost ∝ |matched + inserted| rows, never the touched
-    * buckets' bytes — the slope that makes a daily CDC feed over a
-    * 100 TB table affordable. Any rename failure deletes the moved-in
-    * files and aborts with the current snapshot untouched. */
-  private def commitStagedMorMut(spark: SparkSession, f: FileSystem,
-                                 dir: String, data: String,
-                                 dataStaging: String, dvStaging: String,
-                                 touched: Seq[Int], op: String,
-                                 base: Manifest, meta: TableMeta,
-                                 streamEpoch: Option[(String, Long)] = None,
-                                 preStats: Option[Map[(Int, String),
-                                   FileFooter]] = None)
-      : Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statCol = meta.pk.headOption
-    val statColsTyped: Seq[(String, DataType)] = statColsTypedOf(meta)
-    val commitId = UUID.randomUUID().toString.take(8)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    def abort(msg: String): Nothing = {
-      moved.foreach(p => f.delete(p, false))
-      throw new StoreException(msg)
-    }
-    def moveIn(staging: String, pfx: String): Map[Int, Seq[(Path, Long)]] =
-      touched.flatMap { b =>
-        val sdir = new Path(staging, s"$BucketCol=$b")
-        if (!f.exists(sdir)) None
-        else {
-          val files = f.listStatus(sdir)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-          if (files.isEmpty) None
-          else {
-            val tdir = new Path(data, s"$BucketCol=$b")
-            if (!f.mkdirs(tdir))
-              abort(s"$op(mor): could not create bucket dir $tdir; " +
-                "commit aborted, current snapshot unchanged")
-            Some(b -> files.toSeq.map { st =>
-              val dst = new Path(tdir, s"$commitId-$pfx${st.getPath.getName}")
-              if (!f.rename(st.getPath, dst))
-                abort(s"$op(mor): could not move staged file " +
-                  s"${st.getPath} -> $dst; commit aborted, current " +
-                  "snapshot unchanged")
-              moved += dst
-              (dst, st.getLen)
-            })
-          }
-        }
-      }.toMap
-    val dataMoved = moveIn(dataStaging, "")
-    val dvMoved = moveIn(dvStaging, "dv-")
-    // post-image footer stats pre-collected OUTSIDE the lock when the
-    // caller staged them (see [[stageFileStats]]); DV position files
-    // stay in-lock — delta-sized, and the upsert-mode sink RE-DERIVES
-    // them inside the lock on a window conflict
-    val pre: Map[Path, FileFooter] =
-      preStats.fold(Map.empty[Path, FileFooter]) {
-        ps =>
-          dataMoved.iterator.flatMap { case (b, fls) =>
-            fls.flatMap { case (dst, _) =>
-              ps.get((b, dst.getName.stripPrefix(s"$commitId-")))
-                .map(dst -> _)
-            }
-          }.toMap
-      }
-    val footer = pre ++ pkFileStatsAll(conf,
-      dataMoved.valuesIterator.flatten.map(_._1)
-        .filterNot(pre.contains).toSeq, statColsTyped)
-    val dvFooter = pkFileStatsAll(conf,
-      dvMoved.valuesIterator.flatten.map(_._1).toSeq, Nil)
-    val newFiles: Map[Int, Seq[ManifestFile]] =
-      base.files ++ dataMoved.map { case (b, fls) =>
-        b -> (base.files.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          val fstat = footer(dst)
-          ManifestFile(dst.getName, len, fstat.rows,
-            statCol.flatMap(fstat.cols.get),
-            statCol.fold(fstat.cols)(fstat.cols - _),
-            fstat.nulls)
-        })
-      }
-    val newDvs: Map[Int, Seq[ManifestFile]] =
-      base.dvs ++ dvMoved.map { case (b, fls) =>
-        b -> (base.dvs.getOrElse(b, Nil) ++ fls.map { case (dst, len) =>
-          ManifestFile(dst.getName, len, dvFooter(dst).rows)
-        })
-      }
-    val mf = Manifest(base.version + 1, base.buckets, newFiles,
-      op = Some(op), dvs = newDvs, streams = base.streams ++ streamEpoch)
-    try Manifest.commit(spark, dir, mf)
-    catch { case e: Throwable => moved.foreach(p => f.delete(p, false)); throw e }
-  }
 
   /** Raw bucket-partitioned read with the evolved logical schema (old
     * files lacking evolved columns yield NULLs). Resolves the file set
@@ -1606,311 +1590,99 @@ object KeyedTable {
     }, meta)
   }
 
-  private def append(df: DataFrame, warehouse: String, table: String,
+  /** Append — reference `to_sql` how=append — as one [[WriteTxn]]. The
+    * delta is bucketed and persisted once; one job answers the PK checks
+    * and the touched buckets; then the PK-overlap probe against the
+    * pinned snapshot and the changelog images (all inserts — every row
+    * is new by the overlap contract; old_* NULL, no pre-image join) run
+    * BESIDE the staging write ([[Parallel.inParallel]]: the first
+    * failure cancels the sibling).
+    *
+    * Validation is KEY-level: appends add uniquely-named files, so two
+    * appends compose even into the same buckets. At the flip only the
+    * files ADDED since the pin are re-probed ([[filesAddedSince]];
+    * usually none ⇒ no IO), so the two probes together cover the
+    * committed snapshot exactly. (A key DELETED since the pin may fail
+    * the probe spuriously; the retry then succeeds — conservative,
+    * never unsound.) The other flip-time conflicts — a rebucket, a
+    * staged column re-typed or dropped ([[mergeEvolved]]), a CHECK
+    * added meanwhile — abort like every optimistic conflict.
+    *
+    * Auto-index tables reserve their id range under
+    * [[WriteTxn.underLock]] between the row count and the id assignment
+    * (the high-water mark is the one piece of append state that cannot
+    * be merged after the fact); the mark commits before the data, so a
+    * crash leaves an id gap, never a duplicate. A `txn` token (see
+    * [[toSql]]) makes a replayed append a no-op — checked at the pin and
+    * again at the flip, so two racing attempts commit exactly once. */
+  private def append(df: DataFrame, wh: String, table: String,
                      addNewColumns: Boolean, validate: Boolean,
-                     changelog0: Boolean = false,
-                     txn: Option[(String, Long)] = None): Unit = {
-    val spark = df.sparkSession
-    val dir = tableDir(warehouse, table)
-    val meta0 = TableMeta.read(spark, dir)
-    // idempotent-retry fast exit (see toSql's txn contract): the whole
-    // mutation runs under the table lock, so one check here is
-    // race-free — BEFORE the auto-index mark bumps or any job runs
-    if (txn.exists { case (id, v) =>
-          Manifest.current(spark, dir).exists(_.streams.get(id).exists(_ >= v))
-        }) return
-    // table-property CDC (see TableMeta.changelog): an append to a
-    // changelog-maintained table logs its rows as `insert` ops — old_*
-    // all NULL, new_* = the incoming values; no pre-image join needed
-    // (appends are overlap-checked, every row is new by contract)
-    val changelog = changelog0 || meta0.changelog
-
-    val (aligned0, evolved, meta) =
-      if (meta0.autoIndex) {
-        // continue the synthetic PK from the stored high-water mark —
-        // no table scan; pre-field tables recover via footer stats
-        val cur = meta0.maxAutoIndex
-          .getOrElse(footerMaxAutoIndex(spark, warehouse, table, meta0))
-        val (withIds, n) = assignAutoIndex(df, cur + 1L)
-        val m = meta0.copy(maxAutoIndex = Some(cur + n))
-        // the mark commits BEFORE the data write: a crash between the
-        // two leaves it too high (harmless id gap), never too low
-        // (duplicate ids on the next append)
-        TableMeta.write(spark, dir, m)
-        val (a, e) = align(withIds, m, addNewColumns)
-        (a, e, m)
-      } else {
-        val (a, e) = align(df, meta0, addNewColumns)
-        (a, e, meta0)
-      }
-
-    val data = dataDir(warehouse, table)
-    val base = snapshotForWrite(spark, dir, data, meta)
-    val newB = withBucket(aligned0, meta.pk, base.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      enforceChecks(newB, meta.checks, "append")
-      // validate AFTER persist so the (possibly expensive) incoming
-      // pipeline is computed once; one fused job answers the PK check
-      // and the touched-bucket set off the cache
-      val touched = validateAndTouched(newB, meta.pk, validate && !meta.autoIndex)
-      // staged write + ADDITIVE manifest commit: the new files extend
-      // the touched buckets' lists; nothing live is replaced.
-      // The PK-overlap probe and the (optional) changelog batch read
-      // only the live snapshot + the cached delta — independent of the
-      // staging write, so the three jobs overlap (guide §2.6); any
-      // failure aborts before the commit flips anything, exactly as
-      // the sequential order did.
-      val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
-      val f = fs(spark, dir)
-      var clCommit: Option[(Path, Path)] = None
+                     changelog0: Boolean, txn: Option[(String, Long)],
+                     op: String, waitMs: Option[Long]): Unit =
+    withTxn(df.sparkSession, wh, table, op, waitMs) { t =>
+      val spark = t.spark
+      def replayed(m: Manifest): Boolean =
+        txn.exists { case (id, v) => m.streams.get(id).exists(_ >= v) }
+      if (replayed(t.base)) return
+      val withIds =
+        if (!t.meta.autoIndex) df
+        else assignAutoIndexWith(df) { n =>
+          t.underLock("reserve-ids") {
+            val m0 = if (t.locked) t.meta else TableMeta.read(spark, t.dir)
+            val cur = m0.maxAutoIndex
+              .getOrElse(footerMaxAutoIndex(spark, wh, table, m0))
+            t.meta = m0.copy(maxAutoIndex = Some(cur + n))
+            TableMeta.write(spark, t.dir, t.meta)
+            cur + 1L
+          }
+        }._1
+      val meta = t.meta
+      val changelog = changelog0 || meta.changelog
+      val (aligned, evolved) = align(withIds, meta, addNewColumns)
+      val newB = withBucket(aligned, meta.pk, t.base.buckets)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        try {
-          inParallel(
-            {
-              if (!meta.autoIndex) {
-                val old = readRawWith(spark, warehouse, table, meta, manifestOf(base))
-                  .filter(col(BucketCol).isin(touched: _*))
-                val overlap = newB.join(old, meta.pk, "left_semi").limit(5)
-                  .select(meta.pk.map(col): _*).collect()
-                if (overlap.nonEmpty)
-                  throw new StoreException(
-                    s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
-                    "(reference: sql.py:264 append raises on repeated index)")
-              }
-              // Changelog batch: all inserts (every row is new by the
-              // overlap contract); staged before the data commit,
-              // renamed in only after it — same ordering as upsert's
-              if (changelog) {
-                val nonPk = evolved.fieldNames.filterNot(meta.pk.contains).toSeq
-                val images = nonPk.flatMap { c =>
-                  Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-                    col(c).as(s"new_$c"))
-                }
-                val changes = newB
-                  .select(meta.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-                clCommit = Some(stageChangelogBatch(spark, dir, changes))
-              }
-            },
-            toPhys(clusterByBucket(newB, base.buckets, meta.pk), meta)
-              .write.partitionBy(BucketCol).parquet(staging))
-          commitStaged(spark, f, dir, data, staging, touched, "append",
-            base, base.buckets, meta, add = true, streamEpoch = txn)
-        } finally f.delete(new Path(staging), true)
-        clCommit.foreach { case (src, dst) =>
-          commitChangelogBatch(f, "append", src, dst)
+        enforceChecks(newB, meta.checks, op)
+        val touched = validateAndTouched(newB, meta.pk, validate && !meta.autoIndex)
+        def clashes(m: TableMeta, snapshot: Option[Manifest]): Array[Row] =
+          newB.join(readRawWith(spark, wh, table, m, snapshot)
+              .filter(col(BucketCol).isin(touched: _*)), meta.pk, "left_semi")
+            .limit(5).select(meta.pk.map(col): _*).collect()
+        def images(): DataFrame = {
+          val nonPk = evolved.fieldNames.filterNot(meta.pk.contains).toSeq
+          newB.select(meta.pk.map(col) ++ (lit("insert").as("op") +:
+            nonPk.flatMap { c =>
+              Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
+                col(c).as(s"new_$c"))
+            }): _*)
         }
-      } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
-      val meta2 = meta.copy(schema = evolved, changelog = changelog)
-      if (meta2 != meta) TableMeta.write(spark, dir, meta2)
-    } finally newB.unpersist()
-  }
-
-  /** A writer baseline as a reader manifest: the adopted version "-1"
-    * baseline of a legacy table means "no manifest — read the dirs". */
-  private def manifestOf(base: Manifest): Option[Manifest] =
-    if (base.version >= 0) Some(base) else None
-
-  /** OPTIMISTIC append: the Delta/Iceberg commit model for the one
-    * mutation shape that composes — appends add uniquely-named files,
-    * so two appends to the same table (even the same buckets) never
-    * physically conflict; only the manifest flip must serialize.
-    *
-    * [[toSql]]'s append holds the write lock for the WHOLE mutation —
-    * planning, validation, and the (possibly huge) staged write job —
-    * so N ingest jobs into one table serialize end-to-end: at 1000
-    * executors the cluster runs one append's tasks while N−1 drivers
-    * wait. This path instead:
-    *
-    *  1. UNLOCKED: reads the current snapshot, buckets + validates the
-    *     delta, pre-checks PK overlap against the snapshot-at-start
-    *     (delta-bounded), and runs the staged write job;
-    *  2. LOCKED (briefly, queuing up to `commitWaitMs` behind other
-    *     committers — the section is a manifest flip, not a write job):
-    *     re-validates against the LATEST state and commits.
-    *
-    * Commit-time conflict rules (all throw [[ConcurrentWriteException]]
-    * with the table unchanged and staging cleaned; retry the call):
-    *  - bucket count changed (a rebucket won the race) — staged files
-    *    are bucketed under the old layout;
-    *  - schema conflict: a column now typed differently than our staged
-    *    files wrote it, or since dropped (writing it would silently
-    *    discard or later resurrect data);
-    *  - PK overlap with rows committed since our snapshot — checked
-    *    against only the files ADDED between snapshot-at-start and
-    *    latest (usually none ⇒ zero IO): a key live at commit time is
-    *    either in a start-snapshot file (pre-checked) or in an added
-    *    file (re-checked), so the two checks together cover the latest
-    *    snapshot exactly. (A key DELETED since the start may fail the
-    *    pre-check spuriously; the retry then succeeds — conservative,
-    *    never unsound.)
-    *
-    * Auto-index tables reserve their id range under a short lock before
-    * staging (the high-water mark is the one piece of append state that
-    * cannot be merged after the fact); a crash after reserving leaves
-    * an id gap, never a duplicate — same rule as [[append]].
-    * A pre-manifest legacy table (no snapshot isolation to commit
-    * against) falls back to the classic locked append, waiting up to
-    * `commitWaitMs` for the lock. */
-  def appendConcurrent(df: DataFrame, warehouse0: String, tableName: String,
-                       addNewColumns: Boolean = false,
-                       validate: Boolean = true,
-                       schema: Option[String] = None,
-                       changelog: Boolean = false,
-                       commitWaitMs: Long = 60000L,
-                       txn: Option[(String, Long)] = None): Unit = {
-    val spark = df.sparkSession
-    val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"appendConcurrent: table $tableName does not exist " +
-        "(create it with toSql first — creation must arbitrate under the lock)")
-    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-    if (naive.nonEmpty)
-      throw new StoreException(
-        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-        "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to diff against — classic locked
-      // append (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLockWait(spark, dir, "appendConcurrent(legacy)",
-        commitWaitMs) {
-        append(cleaned, wh, tableName, addNewColumns, validate, changelog,
-          txn)
-      }
-      return
-    }
-    // idempotent-retry fast exit against the snapshot-at-start (cheap,
-    // unlocked); the LOCKED commit below re-checks against the latest
-    // snapshot, which is what makes two racing attempts with the same
-    // token commit exactly once
-    if (txn.exists { case (id, v) =>
-          base0.streams.get(id).exists(_ >= v) }) return
-    val wantChangelog = changelog || meta0.changelog
-
-    // ---------------- UNLOCKED: plan, validate, stage ----------------
-    val (aligned0, evolved, metaUsed) =
-      if (meta0.autoIndex) {
-        val n = cleaned.count()
-        // short lock: reserve [cur+1, cur+n]; mark-before-data as in
-        // append (crash ⇒ id gap, never a duplicate). Assignment and
-        // alignment run AFTER release — only the high-water-mark bump
-        // needs exclusion.
-        val (start, m) = WriteLock.withLockWait(spark, dir,
-            "appendConcurrent(reserve-ids)", commitWaitMs) {
-          val m0 = TableMeta.read(spark, dir)
-          val cur = m0.maxAutoIndex
-            .getOrElse(footerMaxAutoIndex(spark, wh, tableName, m0))
-          val m1 = m0.copy(maxAutoIndex = Some(cur + n))
-          TableMeta.write(spark, dir, m1)
-          (cur + 1L, m1)
-        }
-        val (withIds, n2) = assignAutoIndex(cleaned, start)
-        if (n2 != n)
-          throw new StoreException(
-            s"appendConcurrent: incoming frame is non-deterministic " +
-            s"($n rows at reservation, $n2 at assignment); ids would " +
-            "escape the reserved range — materialize the input first")
-        val (a, e) = align(withIds, m, addNewColumns)
-        (a, e, m)
-      } else {
-        val (a, e) = align(cleaned, meta0, addNewColumns)
-        (a, e, meta0)
-      }
-    val newB = withBucket(aligned0, metaUsed.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    try {
-      enforceChecks(newB, metaUsed.checks, "appendConcurrent")
-      val touched = validateAndTouched(newB, metaUsed.pk,
-        validate && !metaUsed.autoIndex)
-      if (!metaUsed.autoIndex) {
-        // provisional overlap pre-check against the snapshot-at-start
-        // (unlocked; the locked re-check below covers everything added
-        // since, so together they cover the commit-time snapshot)
-        val old = readRawWith(spark, wh, tableName, metaUsed, Some(base0))
-          .filter(col(BucketCol).isin(touched: _*))
-        val overlap = newB.join(old, metaUsed.pk, "left_semi").limit(5)
-          .select(metaUsed.pk.map(col): _*).collect()
-        if (overlap.nonEmpty)
-          throw new StoreException(
-            s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
-            "(reference: sql.py:264 append raises on repeated index)")
-      }
-      // changelog images staged UNLOCKED (append images need no
-      // pre-image join); batch number + rename happen inside the lock.
-      // The same staging runs INSIDE the lock if a concurrent writer
-      // enabled the changelog property while we staged without one —
-      // every mutation on a CDC table must land a batch (the invariant
-      // readChangelog documents), and newB is persisted, so the
-      // lock-time job is one cached-scan write, not a recompute.
-      def stageInsertImages(): Path = {
-        val nonPk = evolved.fieldNames.filterNot(metaUsed.pk.contains).toSeq
-        val images = nonPk.flatMap { c =>
-          Seq(lit(null).cast(evolved(c).dataType).as(s"old_$c"),
-            col(c).as(s"new_$c"))
-        }
-        val changes = newB
-          .select(metaUsed.pk.map(col) ++ (lit("insert").as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageInsertImages()) else None
-      var clLate: Option[Path] = None
-      val staging = s"$dir/.staging-append-${UUID.randomUUID()}"
-      try {
-        // the expensive job — OUTSIDE the lock
-        toPhys(clusterByBucket(newB, base0.buckets, metaUsed.pk), metaUsed)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(metaUsed))
-
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "appendConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-          // a racing attempt with the same txn token committed while
-          // this one staged: no-op (staging cleaned by the finally) —
-          // checked FIRST so a replay never trips the conflict guards
-          if (txn.exists { case (id, v) =>
-                baseLatest.streams.get(id).exists(_ >= v) }) return
-          // a CHECK constraint registered since this append staged was
-          // validated against a snapshot that excludes our rows — the
-          // commit must enforce the NEW constraints itself (the common
-          // case pays nothing: no new checks, no job)
-          enforceChecks(newB,
-            metaLatest.checks -- metaUsed.checks.keySet,
-            "appendConcurrent(commit)")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the append")
-          val mergedSchema = mergeEvolved(evolved, metaUsed, metaLatest)
-          if (!metaUsed.autoIndex && baseLatest.version != base0.version) {
-            // re-check overlap against only the files ADDED since our
-            // snapshot in the buckets we touch — usually none ⇒ no IO
-            val addedByBucket = touched.flatMap { b =>
-              val before = base0.files.getOrElse(b, Nil).map(_.name).toSet
-              val now = baseLatest.files.getOrElse(b, Nil)
-                .filterNot(x => before.contains(x.name))
-              if (now.isEmpty) None else Some(b -> now)
-            }.toMap
-            if (addedByBucket.nonEmpty) {
-              val addedDf = readRawWith(spark, wh, tableName, metaLatest,
-                Some(baseLatest.copy(files = addedByBucket)))
-              val clash = newB.join(addedDf, metaUsed.pk, "left_semi")
-                .limit(5).select(metaUsed.pk.map(col): _*).collect()
+        val staging = t.staging("append")
+        val (cl, _) = inParallel(spark)(
+          {
+            if (!meta.autoIndex) {
+              val overlap = clashes(meta, manifestOf(t.base))
+              if (overlap.nonEmpty)
+                throw new StoreException(
+                  s"Append would overwrite existing PKs, e.g. ${overlap.mkString(", ")} " +
+                  "(reference: sql.py:264 append raises on repeated index)")
+            }
+            if (changelog) Some(t.stageChangelog(images())) else None
+          },
+          labeled(spark, s"graft-$op $table: staging write") {
+            toPhys(clusterByBucket(newB, t.base.buckets, meta.pk), meta)
+              .write.partitionBy(BucketCol).parquet(staging)
+          })
+        t.collectStats(Some(staging))
+        t.flip() { (metaL, baseL) =>
+          if (replayed(baseL)) return
+          enforceChecks(newB, metaL.checks -- meta.checks.keySet, s"$op(commit)")
+          // only the layout rule of the window: appends touch no pre-image
+          windowCheck(t.base, baseL, Nil, "this append", "retry the append")
+          val schema = mergeEvolved(evolved, meta, metaL, "append")
+          if (!meta.autoIndex && baseL.version != t.base.version) {
+            val added = filesAddedSince(t.base, baseL, touched)
+            if (added.nonEmpty) {
+              val clash = clashes(metaL, Some(baseL.copy(files = added)))
               if (clash.nonEmpty)
                 throw new ConcurrentWriteException(
                   s"PK(s) ${clash.mkString(", ")} were written by a " +
@@ -1918,38 +1690,82 @@ object KeyedTable {
                   "(or use upsert semantics if overwrite is intended)")
             }
           }
-          // a concurrent writer may have ENABLED the changelog property
-          // since this append staged without one — commit must still
-          // land this append's batch or downstream log consumers would
-          // silently miss these rows (see readChangelog's invariant)
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageInsertImages())
-          commitStaged(spark, f, dir, data, staging, touched,
-            "appendConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema), add = true,
-            streamEpoch = txn, preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "appendConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
+          // newB is persisted: a late batch is one cached-scan write
+          val clSrc = t.changelogAtFlip(cl, metaL)(images())
+          t.commit(metaL.copy(schema = schema), baseL, touched, Some(staging),
+            add = true, streamEpoch = txn)
+          t.commitChangelog(clSrc)
+          val metaFinal = metaL.copy(schema = schema,
+            changelog = changelog || metaL.changelog)
+          if (metaFinal != metaL) TableMeta.write(spark, t.dir, metaFinal)
         }
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-      }
-    } finally newB.unpersist()
+      } finally newB.unpersist()
+    }
+
+  /** A writer baseline as a reader manifest: the adopted version "-1"
+    * baseline of a legacy table means "no manifest — read the dirs". */
+  private def manifestOf(base: Manifest): Option[Manifest] =
+    if (base.version >= 0) Some(base) else None
+
+  /** The optimistic-mode entry checks shared by the `*Concurrent` verbs:
+    * creation must arbitrate under the lock, so the table must exist. */
+  private def requireTable(spark: SparkSession, wh: String, table: String,
+                           op: String): Unit =
+    if (!TableMeta.exists(spark, tableDir(wh, table)))
+      throw new StoreException(
+        s"$op: table $table does not exist (create it with toSql first — " +
+        "creation must arbitrate under the lock)")
+
+  /** The reference's fail-fast UTC contract (sql.py:100, 133-136): a
+    * naive (TimestampNTZ) column is rejected; see [[toSql]]'s
+    * `strictUtc`. */
+  private def rejectNaive(df: DataFrame): Unit = {
+    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
+    if (naive.nonEmpty)
+      throw new StoreException(
+        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
+        "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
+        "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)")
   }
 
-  /** Merge this append's (possibly evolved) schema into the table's
+  /** Clean column names the way the reference silently does
+    * (helpers.py:228). */
+  private def cleanColumns(df: DataFrame): DataFrame =
+    df.columns.foldLeft(df) { (d, c) =>
+      val cc = Names.cleanName(c)
+      if (cc == c) d else d.withColumnRenamed(c, cc)
+    }
+
+  /** OPTIMISTIC append: [[append]] in the [[WriteTxn]]'s optimistic mode
+    * — the Delta/Iceberg commit model for the one mutation shape that
+    * composes. [[toSql]]'s append holds the write lock for the WHOLE
+    * mutation, so N ingest jobs into one table serialize end-to-end;
+    * here validation and the staged write run unlocked and only the
+    * re-validation plus manifest flip queue (up to `commitWaitMs`)
+    * behind other committers. Conflicts abort with
+    * [[ConcurrentWriteException]], the table unchanged and staging
+    * cleaned; retry the call. */
+  def appendConcurrent(df: DataFrame, warehouse0: String, tableName: String,
+                       addNewColumns: Boolean = false,
+                       validate: Boolean = true,
+                       schema: Option[String] = None,
+                       changelog: Boolean = false,
+                       commitWaitMs: Long = 60000L,
+                       txn: Option[(String, Long)] = None): Unit = {
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(df.sparkSession, wh, tableName, "appendConcurrent")
+    rejectNaive(df)
+    append(cleanColumns(df), wh, tableName, addNewColumns, validate,
+      changelog, txn, "appendConcurrent", Some(commitWaitMs))
+  }
+
+  /** Merge this write's (possibly evolved) schema into the table's
     * COMMIT-TIME schema, detecting concurrent-evolution conflicts:
     * columns another writer added meanwhile are kept (our files read
     * NULL for them); columns we add are appended; a type mismatch or a
     * since-dropped column aborts ([[ConcurrentWriteException]]). */
   private def mergeEvolved(evolved: StructType, metaUsed: TableMeta,
-                           metaLatest: TableMeta): StructType = {
+                           metaLatest: TableMeta, verb: String): StructType = {
     if (metaLatest.schema == metaUsed.schema) return evolved
     val latestTypes = metaLatest.schema.fields.map(x => x.name -> x.dataType).toMap
     evolved.fields.foreach { fld =>
@@ -1957,209 +1773,49 @@ object KeyedTable {
         if (t != fld.dataType)
           throw new ConcurrentWriteException(
             s"column ${fld.name} is now ${t.catalogString} but this " +
-            s"append staged ${fld.dataType.catalogString} " +
-            "(concurrent schema change); retry the append")
+            s"$verb staged ${fld.dataType.catalogString} " +
+            s"(concurrent schema change); retry the $verb")
       }
       if (metaLatest.dropped.contains(fld.name) &&
           !latestTypes.contains(fld.name))
         throw new ConcurrentWriteException(
           s"column ${fld.name} was dropped by a concurrent mutation; " +
           "its staged values would be silently discarded — retry the " +
-          "append against the current schema")
+          s"$verb against the current schema")
     }
     val extra = evolved.fields.filterNot(x => latestTypes.contains(x.name))
     StructType(metaLatest.schema.fields ++ extra)
   }
 
-  /** Upsert WITHOUT holding the write lock for the merge job — the
-    * [[appendConcurrent]] protocol extended to a REPLACE-shaped
-    * mutation via a BUCKET-LEVEL conflict window (the Delta/Iceberg
-    * multi-writer story): two upserts into DISJOINT bucket sets both
-    * commit; overlapping ones abort-and-retry instead of corrupting
-    * each other's pre-image.
-    *
-    *  1. UNLOCKED: snapshot-at-start, bucket + validate the delta,
-    *     full-outer-merge it against the snapshot's TOUCHED buckets,
-    *     stage the replacement bucket files (CoW) and the changelog
-    *     images (classified against the same pre-image);
-    *  2. LOCKED (briefly — a manifest flip, not a write job):
-    *     re-validate against the LATEST state and commit.
-    *
-    * Commit-time conflict rules (all throw [[ConcurrentWriteException]]
-    * with the table unchanged and staging cleaned; retry the call):
-    *  - bucket count changed (a rebucket won the race);
-    *  - schema conflict (a staged column re-typed or dropped since);
-    *  - TOUCHED-BUCKET overlap: any touched bucket whose manifest
-    *    window (file set OR delete-vector set) changed since the start
-    *    snapshot — the staged merge read a pre-image that is no longer
-    *    the truth. Disjoint-bucket writers never trip this: their
-    *    buckets carry over untouched through each other's commits, so
-    *    N upsert jobs into N key ranges overlap their merge work and
-    *    serialize only on the flip.
-    *
-    * Versus [[appendConcurrent]] the window is per-BUCKET, not per-KEY:
-    * an upsert rewrites whole buckets, so a same-bucket concurrent
-    * write invalidates the staged output even when the KEYS are
-    * disjoint — the bucket window is exactly the granularity the
-    * commit replaces. Plain upserts only (partial-column semantics
-    * included); merge feeds and deletes keep the locked path.
-    * Auto-index tables refuse (same contract as [[upsert]]); a
-    * pre-manifest legacy table falls back to the classic locked
-    * upsert. */
+  /** Upsert in the [[WriteTxn]]'s optimistic mode: the full-outer merge
+    * of the delta against the pinned snapshot's touched buckets, its
+    * staged replacement files and its changelog images all run
+    * unlocked; the flip re-validates the TOUCHED-BUCKET window
+    * ([[windowCheck]]). The window is per-BUCKET, not per-KEY: an
+    * upsert rewrites whole buckets, so a same-bucket concurrent write
+    * invalidates the staged output even when the keys are disjoint,
+    * while N upsert jobs into N key ranges overlap their merge work and
+    * serialize only on the flip. Same contract as [[toSql]]'s upsert
+    * (partial-column semantics included); auto-index tables refuse. */
   def upsertConcurrent(df: DataFrame, warehouse0: String, tableName: String,
                        addNewColumns: Boolean = false,
                        validate: Boolean = true,
                        schema: Option[String] = None,
                        changelog: Boolean = false,
                        commitWaitMs: Long = 60000L): Unit = {
-    val spark = df.sparkSession
     val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"upsertConcurrent: table $tableName does not exist " +
-        "(create it with toSql first — creation must arbitrate under the lock)")
-    val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-    if (naive.nonEmpty)
-      throw new StoreException(
-        s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-        "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    val cleaned = df.columns.foldLeft(df) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    val data = dataDir(wh, tableName)
-    val meta0 = TableMeta.read(spark, dir)
-    if (meta0.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to window against — classic locked
-      // upsert (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLockWait(spark, dir, "upsertConcurrent(legacy)",
-        commitWaitMs) {
-        upsert(cleaned, wh, tableName, addNewColumns, validate, changelog)
-      }
-      return
-    }
-    val wantChangelog = changelog || meta0.changelog
-    // partial-column contract: only columns PRESENT in the incoming
-    // frame overwrite; the rest keep stored values (reference
-    // sql.py:299) — captured before align pads the schema
-    val incomingCols = cleaned.columns.toSet
-    val (aligned, evolved) = align(cleaned, meta0, addNewColumns)
-    val newB = withBucket(aligned, meta0.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    try {
-      enforceChecks(newB, meta0.checks, "upsertConcurrent")
-      val touched = validateAndTouched(newB, meta0.pk, validate)
-      val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), Some(base0))
-        .filter(col(BucketCol).isin(touched: _*))
-      val marked = newB.withColumn("_graft_new", lit(true))
-      val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer")
-        .select(meta0.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c"))
-                .otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol"))
-          .as(BucketCol): _*)
-      // changelog images classified against the snapshot-at-start
-      // pre-image — valid at commit BECAUSE the touched-bucket window
-      // check proves that pre-image is still the live truth
-      def stageImages(): Path = {
-        val presentOld = col(s"o.$BucketCol").isNotNull
-        val valueCols = incomingCols.toSeq
-          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post =
-            if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          Seq(col(s"o.$c").as(s"old_$c"), post.as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          .select(meta0.pk.map(col) ++ (
-            when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageImages()) else None
-      var clLate: Option[Path] = None
-      val staging = s"$dir/.staging-upsertc-${UUID.randomUUID()}"
-      try {
-        // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, base0.buckets, meta0.pk), meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
-        UpsertConcurrentHooks.betweenPhases()
-
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "upsertConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-          enforceChecks(newB,
-            metaLatest.checks -- meta0.checks.keySet,
-            "upsertConcurrent(commit)")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the upsert")
-          val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
-          if (baseLatest.version != base0.version) {
-            def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-              (m.files.getOrElse(b, Nil).map(_.name).toSet,
-                m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-            val dirty = touched
-              .filter(b => window(base0, b) != window(baseLatest, b))
-            if (dirty.nonEmpty)
-              throw new ConcurrentWriteException(
-                s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-                "since this upsert staged (concurrent mutation with an " +
-                "overlapping touched-bucket set); the staged merge read a " +
-                "stale pre-image — retry the upsert")
-          }
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageImages())
-          commitStaged(spark, f, dir, data, staging, touched,
-            "upsertConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema),
-            preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "upsertConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-        }
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-      }
-    } finally newB.unpersist()
+    requireTable(df.sparkSession, wh, tableName, "upsertConcurrent")
+    rejectNaive(df)
+    upsert(cleanColumns(df), wh, tableName, addNewColumns, validate,
+      changelog, "upsertConcurrent", Some(commitWaitMs))
+    ()
   }
 
-  /** Test-only interleave seam: invoked between [[upsertConcurrent]]'s
-    * unlocked stage phase and its locked commit, so a spec can land an
-    * interfering mutation deterministically inside the window the
-    * bucket-level conflict check must catch (or, for a disjoint-bucket
-    * writer, must NOT catch). A no-op in production. */
+  /** Test-only interleave seam: invoked between an optimistic upsert's
+    * stage and its flip, so a spec can land an interfering mutation
+    * deterministically inside the window the bucket-level conflict
+    * check must catch (or, for a disjoint-bucket writer, must NOT
+    * catch). A no-op in production. */
   private[store] object UpsertConcurrentHooks {
     @volatile var betweenPhases: () => Unit = () => ()
   }
@@ -2180,25 +1836,14 @@ object KeyedTable {
     @volatile var betweenPhases: () => Unit = () => ()
   }
 
-  /** Predicate UPDATE without holding the write lock for the rewrite —
-    * the fourth face of the bucket-level optimistic protocol
-    * ([[upsertConcurrent]] / [[deleteConcurrent]] / [[mergeConcurrent]]):
-    * every row-mutating verb now has an optimistic twin. Same contract
-    * as [[update]]: `set` maps existing NON-PK columns to expressions
-    * over the row's CURRENT values (cast to the stored type), only
-    * matching buckets rewrite (CoW) or tombstone + re-append (MoR,
-    * [[DeleteMode]].Auto deciding from the same manifest arithmetic),
-    * CHECKs see the post-images, CDC logs update/unchanged rows with
-    * exact before/after images. Returns the matched-row count.
-    *
-    * The probe, the staged rewrite (or DV positions + post-image
-    * files), and the CDC images run against the snapshot-at-start
-    * OUTSIDE the lock; the locked flip aborts on rebucket, ANY schema
-    * change, or a touched bucket whose file/DV window moved — the
-    * staged bucket images (and MoR position ordinals) are only valid
-    * against the exact pre-image they read. A backfill sweep
-    * partitioned by key range runs N update jobs that serialize only
-    * on manifest flips. */
+  /** Predicate UPDATE in the [[WriteTxn]]'s optimistic mode — same
+    * contract as [[update]] (CoW or MoR, CHECKs on post-images, CDC
+    * images). The probe, the staged rewrite (or DV positions plus
+    * post-image files) and the CDC images run unlocked; the flip aborts
+    * on a rebucket, ANY schema change, a touched bucket whose file/DV
+    * window moved, or a violated CHECK added meanwhile. A backfill
+    * partitioned by key range runs N update jobs that serialize only on
+    * manifest flips. Returns the matched-row count. */
   def updateConcurrent(spark: SparkSession, warehouse0: String,
                        tableName: String, where: Column,
                        set: Map[String, Column],
@@ -2207,201 +1852,22 @@ object KeyedTable {
                        mode: DeleteMode = DeleteMode.Auto,
                        commitWaitMs: Long = 60000L): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"updateConcurrent: table $tableName does not exist")
-    val meta0 = TableMeta.read(spark, dir)
-    set.keys.foreach { c =>
-      if (!meta0.schema.fieldNames.contains(c))
-        throw new StoreException(
-          s"update SET column $c not in table schema ${meta0.schema.fieldNames.toSeq}")
-      if (meta0.pk.contains(c))
-        throw new StoreException(
-          s"update cannot SET primary-key column $c (a key move is a " +
-          "delete + insert; use merge or delete/append)")
-    }
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: classic locked update
-      return WriteLock.withLockWait(spark, dir, "updateConcurrent(legacy)",
-        commitWaitMs) {
-        update(spark, warehouse0, tableName, where, set, schema,
-          changelog, mode)
-      }
-    }
-    val cdc = changelog || meta0.changelog
-    val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, Some(base0))
-    val matched = coalesce(where, lit(false))
-    val probe = raw.filter(matched).groupBy(col(BucketCol))
-      .agg(count(lit(1)).as("n")).collect()
-    val touched = probe.map(_.getInt(0)).toSeq
-    val nMatched = probe.map(_.getLong(1)).sum
-    if (touched.isEmpty) {
-      if (cdc && !meta0.changelog)
-        WriteLock.withLockWait(spark, dir, "updateConcurrent(cdc-flag)",
-            commitWaitMs) {
-          val m = TableMeta.read(spark, dir)
-          if (!m.changelog) TableMeta.write(spark, dir, m.copy(changelog = true))
-        }
-      return 0L
-    }
-    val f = fs(spark, dir)
-    def newVal(c: String): Column =
-      set.get(c).map(_.cast(meta0.schema(c).dataType)).getOrElse(col(c))
-    // the check sees the POST-image of every matched row, before staging
-    enforceChecks(
-      raw.filter(matched).select(meta0.schema.fieldNames.toSeq
-        .map(c => newVal(c).as(c)): _*),
-      meta0.checks, "updateConcurrent")
-    def stageImages(): Path = {
-      val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains).toSeq
-      val changedCond = set.keys.toSeq.sorted
-        .map(c => !(newVal(c) <=> col(c)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val images = nonPk.flatMap { c =>
-        Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
-      }
-      val changes = raw.filter(matched)
-        .select(meta0.pk.map(col) ++ (
-          when(changedCond, lit("update"))
-            .otherwise(lit("unchanged")).as("op") +: images): _*)
-      val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-      changes.write.parquet(p.toString)
-      p
-    }
-    val clStaging: Option[Path] = if (cdc) Some(stageImages()) else None
-    var clLate: Option[Path] = None
-    val mor = morDecision(Some(base0), mode, touched, nMatched,
-      "update", tableName)
-    val staging = s"$dir/.staging-updatec-${UUID.randomUUID()}"
-    val dvStaging = s"$dir/.staging-updatec-dv-${UUID.randomUUID()}"
-    try {
-      // the expensive rewrite job(s) — OUTSIDE the lock
-      if (mor) {
-        val posFrame = readRawPos(spark, warehouse, tableName, meta0,
-            Some(base0), withPos = true)
-          .filter(matched)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          posFrame
-            .select(col(BucketCol), col(FileCol).as("file"),
-              col(PosCol).as("pos"))
-            .repartition(touched.size, col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
-            .write.partitionBy(BucketCol).parquet(dvStaging)
-          toPhys(posFrame
-            .select(meta0.schema.fieldNames.toSeq
-              .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-            .repartition(touched.size, col(BucketCol))
-            .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
-            meta0)
-            .write.partitionBy(BucketCol).parquet(staging)
-        } finally posFrame.unpersist()
-      } else {
-        val rewritten = meta0.schema.fieldNames.toSeq.map { c =>
-          (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
-           else col(c)).as(c)
-        } :+ col(BucketCol)
-        toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-          .select(rewritten: _*)
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-      }
-      // post-image staging has the same bucket layout in BOTH modes —
-      // pre-collect its footer stats outside the lock either way
-      val preStats = stageFileStats(spark, f, staging,
-        statColsTypedOf(meta0))
-      UpdateConcurrentHooks.betweenPhases()
-
-      // ---------------- LOCKED: re-validate, commit ----------------
-      WriteLock.withLockWait(spark, dir, "updateConcurrent(commit)",
-          commitWaitMs) {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-        if (baseLatest.buckets != base0.buckets)
-          throw new ConcurrentWriteException(
-            s"bucket count changed ${base0.buckets} -> " +
-            s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-            "use the old layout — retry the update")
-        if (metaLatest.schema != meta0.schema)
-          throw new ConcurrentWriteException(
-            "table schema changed while this update staged (the rewrite " +
-            "republished bucket images under the old schema); retry the " +
-            "update")
-        def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-          (m.files.getOrElse(b, Nil).map(_.name).toSet,
-            m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-        if (baseLatest.version != base0.version) {
-          val dirty = touched
-            .filter(b => window(base0, b) != window(baseLatest, b))
-          if (dirty.nonEmpty)
-            throw new ConcurrentWriteException(
-              s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-              "since this update staged (concurrent mutation with an " +
-              "overlapping touched-bucket set); the staged rewrite read " +
-              "a stale pre-image — retry the update")
-        }
-        // a CHECK registered while this update staged lives in
-        // TableMeta, so neither the manifest window nor the schema
-        // check above would catch it — re-enforce the delta against
-        // the matched rows' POST-images. Runs AFTER the window/schema
-        // validation: with the schema proven unchanged, a new check can
-        // only reference columns this frame carries, so a clean
-        // constraint error (never a raw AnalysisException about a
-        // concurrently-added column) is what surfaces inside the lock.
-        enforceChecks(
-          raw.filter(matched).select(meta0.schema.fieldNames.toSeq
-            .map(c => newVal(c).as(c)): _*),
-          metaLatest.checks -- meta0.checks.keySet,
-          "updateConcurrent(commit)")
-        if (metaLatest.changelog && clStaging.isEmpty)
-          clLate = Some(stageImages())
-        if (mor)
-          commitStagedMorMut(spark, f, dir, data, staging, dvStaging,
-            touched, "updateConcurrent", baseLatest, metaLatest,
-            preStats = Some(preStats))
-        else
-          commitStaged(spark, f, dir, data, staging, touched,
-            "updateConcurrent", baseLatest, baseLatest.buckets, metaLatest,
-            preStats = Some(preStats))
-        (clStaging orElse clLate).foreach { src =>
-          commitChangelogBatch(f, "updateConcurrent", src,
-            nextChangelogDst(f, dir))
-        }
-        if (cdc && !metaLatest.changelog)
-          TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
-      }
-      nMatched
-    } finally {
-      f.delete(new Path(staging), true)
-      f.delete(new Path(dvStaging), true)
-      (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-    }
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(spark, wh, tableName, "updateConcurrent")
+    updateRows(spark, wh, tableName, where, set, changelog, mode,
+      "updateConcurrent", Some(commitWaitMs))
   }
 
-  /** MERGE (mixed insert/update/delete change feed) WITHOUT holding the
-    * write lock for the merge job — the third face of the bucket-level
-    * optimistic protocol ([[upsertConcurrent]], [[deleteConcurrent]]).
-    * Same contract as [[merge]]: `deleteWhen` rows tombstone their
-    * stored match (under `deleteOnlyMatched`, SQL MERGE semantics — an
-    * unmatched tombstone inserts instead of no-op'ing); everything
-    * else upserts with partial-column semantics. Returns (inserted,
-    * updated, deleted).
-    *
-    * The full-outer merge, the stats job, the CDC images, and the CoW
-    * rewrite all run against the snapshot-at-start OUTSIDE the lock;
-    * the locked flip re-validates the same window as
-    * [[upsertConcurrent]] (bucket count, schema, touched buckets'
-    * file+DV sets) and commits. CoW only: the MoR decomposition's
-    * position ordinals would also survive the window, but a change
-    * feed large enough to want the optimistic path is usually past
-    * [[MorMaxFraction]] anyway — explicit `DeleteMode` dialing stays
-    * on the locked [[merge]]. N change feeds into N key ranges overlap
-    * their merge work and serialize only on manifest flips. */
+  /** MERGE in the [[WriteTxn]]'s optimistic mode — same contract as
+    * [[merge]] (returns (inserted, updated, deleted)), copy-on-write:
+    * a change feed large enough to want the optimistic path is usually
+    * past [[MorMaxFraction]] anyway, so explicit [[DeleteMode]] dialing
+    * stays on [[merge]]. The flip re-validates the touched-bucket
+    * window like [[upsertConcurrent]]; `strictVersion` makes ANY
+    * movement abort (the locked contract) for shapes whose semantics
+    * read the WHOLE snapshot (SQL `WHEN NOT MATCHED BY SOURCE`), where
+    * the bucket window alone would let a concurrent insert into an
+    * untouched bucket survive a full-table sync. */
   def mergeConcurrent(df: DataFrame, warehouse0: String, tableName: String,
                       deleteWhen: Column,
                       schema: Option[String] = None,
@@ -2413,665 +1879,308 @@ object KeyedTable {
                       commitWaitMs: Long = 60000L,
                       expectedVersion: Option[Long] = None,
                       strictVersion: Boolean = false): (Long, Long, Long) = {
-    val spark = df.sparkSession
     val wh = schemaDir(warehouse0, schema)
-    val dir = tableDir(wh, tableName)
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected, as in toSql strictUtc)")
-    }
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"mergeConcurrent target $tableName does not exist (create it with toSql first)")
-    // tombstone flag FIRST (over the raw delta columns), then the same
-    // identifier cleaning as merge; feed-only columns drop after
-    val flagged = df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false)))
-    val cleaned0 = df.columns.foldLeft(flagged) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    val meta0 = TableMeta.read(spark, dir)
-    if (meta0.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-    val keep = cleaned0.columns.filter(c =>
-      c == MergeDelCol || addNewColumns || meta0.schema.fieldNames.contains(c))
-    val cleaned = cleaned0.select(keep.map(col).toIndexedSeq: _*)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: classic locked merge
-      return WriteLock.withLockWait(spark, dir, "mergeConcurrent(legacy)",
-        commitWaitMs) {
-        upsert(cleaned, wh, tableName, addNewColumns, validate, changelog,
-          tombstoned = true, deleteOnlyMatched = deleteOnlyMatched)
-      }
-    }
-    // SQL MERGE routing guard: a partial clause shape pre-filters the
-    // feed against a PINNED snapshot's key set before reaching here —
-    // if the table moved past that version before this call captured
-    // its own snapshot, the routing is stale and must abort (once
-    // base0 == pinned, the touched-bucket window check at the flip
-    // covers every later movement: feed rows route by their own PK,
-    // whose bucket is by construction in the touched set)
-    expectedVersion.foreach { v =>
-      if (base0.version != v)
-        throw new ConcurrentWriteException(
-          s"mergeConcurrent into $tableName planned against snapshot $v " +
-          s"but the table is now at ${base0.version} (concurrent commit " +
-          "since the routing read); table unchanged — retry the merge")
-    }
-    val wantChangelog = changelog || meta0.changelog
-    val incomingCols = cleaned.columns.toSet - MergeDelCol
-    val (aligned, evolved) = align(cleaned, meta0, addNewColumns,
-      passthrough = Set(MergeDelCol))
-    val data = dataDir(wh, tableName)
-    val newB = withBucket(aligned, meta0.pk, base0.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val f = fs(spark, dir)
-    try {
-      val touched = validateAndTouched(newB, meta0.pk, validate)
-      val oldTouched = readRawWith(spark, wh, tableName,
-          meta0.copy(schema = evolved), Some(base0))
-        .filter(col(BucketCol).isin(touched: _*))
-      val marked = newB.withColumn("_graft_new", lit(true))
-      val presentOld = col(s"o.$BucketCol").isNotNull
-      val del: Column = {
-        val flag = coalesce(col(s"n.$MergeDelCol"), lit(false))
-        if (deleteOnlyMatched) flag && presentOld else flag
-      }
-      // checks see the incoming images; tombstones are deletes, exempt
-      // — except an UNMATCHED tombstone under deleteOnlyMatched, which
-      // is an insert candidate (same contract as [[upsert]]). ONE
-      // construction, reused verbatim by the commit-time re-enforcement
-      // of concurrently-added checks below — filtering out ALL
-      // tombstones there would let an unmatched-tombstone INSERT bypass
-      // a check registered while this merge staged.
-      def checkRows: DataFrame = {
-        val keepRows = newB.filter(!coalesce(col(MergeDelCol), lit(false)))
-        if (!deleteOnlyMatched) keepRows
-        else keepRows.unionByName(
-          newB.filter(coalesce(col(MergeDelCol), lit(false)))
-            .join(oldTouched.select(meta0.pk.map(col): _*),
-              meta0.pk.toIndexedSeq, "left_anti"))
-      }
-      enforceChecks(checkRows, meta0.checks, "mergeConcurrent")
-      val nonPk = evolved.fieldNames.filterNot(meta0.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta0.pk.toIndexedSeq, "full_outer")
-        .filter(!del)
-        .select(meta0.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c"))
-                .otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol"))
-          .as(BucketCol): _*)
-      def stageImages(): Path = {
-        val valueCols = incomingCols.toSeq
-          .filterNot(meta0.pk.contains).filter(nonPk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post =
-            if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          Seq(col(s"o.$c").as(s"old_$c"),
-            when(del, lit(null)).otherwise(post).as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          // a tombstone for an ABSENT key changed nothing — no log row
-          .filter(!(del && !presentOld))
-          .select(meta0.pk.map(col) ++ (
-            when(del, lit("delete"))
-              .when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-        changes.write.parquet(p.toString)
-        p
-      }
-      val clStaging: Option[Path] =
-        if (wantChangelog) Some(stageImages()) else None
-      var clLate: Option[Path] = None
-      // merge reports what it did (one delta-sized job)
-      val stats: (Long, Long, Long) = {
-        val r = marked.as("n")
-          .join(oldTouched.as("o"), meta0.pk.toIndexedSeq, "left")
-          .agg(
-            coalesce(sum(when(!del && !presentOld, 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(!del && presentOld, 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)))
-          .head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      val staging = s"$dir/.staging-mergec-${UUID.randomUUID()}"
-      try {
-        // the expensive merge job — OUTSIDE the lock
-        toPhys(clusterByBucket(out, base0.buckets, meta0.pk), meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
-        MergeConcurrentHooks.betweenPhases()
-
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "mergeConcurrent(commit)",
-            commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-          // strictVersion: ANY movement aborts (the locked path's
-          // contract) — for shapes whose semantics read the WHOLE
-          // snapshot (SQL `WHEN NOT MATCHED BY SOURCE` sync), where the
-          // touched-bucket window alone would let a concurrent insert
-          // into an untouched bucket survive a full-table sync
-          // (write-serializable, Delta's WriteSerializable anomaly)
-          if (strictVersion && baseLatest.version != base0.version)
-            throw new ConcurrentWriteException(
-              s"table moved ${base0.version} -> ${baseLatest.version} " +
-              "while this merge staged and strict version enforcement is " +
-              "on (full-snapshot-sync merge); retry the merge")
-          if (baseLatest.buckets != base0.buckets)
-            throw new ConcurrentWriteException(
-              s"bucket count changed ${base0.buckets} -> " +
-              s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-              "use the old layout — retry the merge")
-          val mergedSchema = mergeEvolved(evolved, meta0, metaLatest)
-          if (baseLatest.version != base0.version) {
-            def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-              (m.files.getOrElse(b, Nil).map(_.name).toSet,
-                m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-            val dirty = touched
-              .filter(b => window(base0, b) != window(baseLatest, b))
-            if (dirty.nonEmpty)
-              throw new ConcurrentWriteException(
-                s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-                "since this merge staged (concurrent mutation with an " +
-                "overlapping touched-bucket set); the staged merge read a " +
-                "stale pre-image — retry the merge")
-          }
-          // re-enforce checks added while this merge staged, AFTER the
-          // window validation. Merge legally evolves schema, so a new
-          // check may reference a column this feed does not carry —
-          // that surfaces as a clean conflict (retry re-stages against
-          // the evolved schema), never a raw AnalysisException.
-          try enforceChecks(checkRows,
-            metaLatest.checks -- meta0.checks.keySet,
-            "mergeConcurrent(commit)")
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new ConcurrentWriteException(
-                "a CHECK constraint added while this merge staged " +
-                "references column(s) this merge's frame does not carry " +
-                s"(concurrent schema change): ${e.getMessage}; retry the " +
-                "merge")
-          }
-          if (metaLatest.changelog && clStaging.isEmpty)
-            clLate = Some(stageImages())
-          // removeMissing: a touched bucket whose rows ALL tombstoned
-          // has no staged replacement and leaves the snapshot
-          commitStaged(spark, f, dir, data, staging, touched,
-            "mergeConcurrent", baseLatest, baseLatest.buckets,
-            metaLatest.copy(schema = mergedSchema), removeMissing = true,
-            preStats = Some(preStats))
-          (clStaging orElse clLate).foreach { src =>
-            commitChangelogBatch(f, "mergeConcurrent", src,
-              nextChangelogDst(f, dir))
-          }
-          val metaFinal = metaLatest.copy(schema = mergedSchema,
-            changelog = wantChangelog || metaLatest.changelog)
-          if (metaFinal != metaLatest) TableMeta.write(spark, dir, metaFinal)
-        }
-        stats
-      } finally {
-        f.delete(new Path(staging), true)
-        (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-      }
-    } finally newB.unpersist()
+    if (strictUtc) rejectNaive(df)
+    requireTable(df.sparkSession, wh, tableName, "mergeConcurrent")
+    upsert(mergeFeed(df, deleteWhen), wh, tableName, addNewColumns, validate,
+      changelog, "mergeConcurrent", Some(commitWaitMs), tombstoned = true,
+      deleteOnlyMatched = deleteOnlyMatched, expectedVersion = expectedVersion,
+      strictVersion = strictVersion)
   }
 
-  /** Predicate delete WITHOUT holding the write lock for the rewrite —
-    * [[upsertConcurrent]]'s bucket-level optimistic protocol applied
-    * to [[delete]]: the matched-bucket probe, the CoW survivor rewrite
-    * (or the MoR delete-vector staging — [[DeleteMode]].Auto decides
-    * from the same manifest arithmetic), and the CDC delete images all
-    * run against the snapshot-at-start OUTSIDE the lock; a brief
-    * locked flip re-validates and commits. Abort-and-retry
-    * ([[ConcurrentWriteException]], table unchanged, staging cleaned)
-    * when the manifest window shows a rebucket, ANY schema change (a
-    * full-bucket rewrite staged under the old schema must not publish
-    * over a new one), or a TOUCHED bucket whose file/delete-vector set
-    * changed — the staged survivors (or staged positions: MoR DV
-    * ordinals are only valid against the exact files they indexed)
-    * read a pre-image that is no longer the truth. Disjoint-bucket
-    * deletes and upserts interleave freely: a GDPR erasure sweep
-    * partitioned by key range runs N jobs that serialize only on
-    * manifest flips. Returns the number of deleted rows. */
+  /** Predicate delete in the [[WriteTxn]]'s optimistic mode — same
+    * contract as [[delete]] (CoW survivors or MoR delete vectors, CDC
+    * delete images). The flip aborts on a rebucket, ANY schema change
+    * (a CoW rewrite staged under the old schema must not publish over a
+    * new one), or a touched bucket whose file/DV window moved. A GDPR
+    * erasure sweep partitioned by key range runs N jobs that serialize
+    * only on manifest flips. Returns the number of deleted rows. */
   def deleteConcurrent(spark: SparkSession, warehouse0: String,
                        tableName: String, where: Column,
                        schema: Option[String] = None,
                        changelog: Boolean = false,
                        mode: DeleteMode = DeleteMode.Auto,
                        commitWaitMs: Long = 60000L): Long = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (!TableMeta.exists(spark, dir))
-      throw new StoreException(
-        s"deleteConcurrent: table $tableName does not exist")
-    val meta0 = TableMeta.read(spark, dir)
-    val base0 = Manifest.current(spark, dir).getOrElse {
-      // legacy table: no snapshot to window against — classic locked
-      // delete (which adopts a manifest, so the NEXT call is optimistic)
-      return WriteLock.withLockWait(spark, dir, "deleteConcurrent(legacy)",
-        commitWaitMs) {
-        delete(spark, warehouse0, tableName, where, schema, changelog, mode)
-      }
-    }
-    val cdc = changelog || meta0.changelog
-    val data = dataDir(warehouse, tableName)
-    val raw = readRawWith(spark, warehouse, tableName, meta0, Some(base0))
-    val probe = raw.filter(where).groupBy(col(BucketCol))
-      .agg(count(lit(1)).as("n")).collect()
-    val touched = probe.map(_.getInt(0)).toSeq
-    val deleted = probe.map(_.getLong(1)).sum
-    if (touched.isEmpty) {
-      // parity with [[delete]]: an explicit changelog request on a
-      // no-match delete still arms table-property CDC for later writers
-      if (cdc && !meta0.changelog)
-        WriteLock.withLockWait(spark, dir, "deleteConcurrent(cdc-flag)",
-            commitWaitMs) {
-          val m = TableMeta.read(spark, dir)
-          if (!m.changelog) TableMeta.write(spark, dir, m.copy(changelog = true))
-        }
-      return 0L
-    }
-    val f = fs(spark, dir)
-    val mor = morDecision(Some(base0), mode, touched, deleted,
-      "delete", tableName)
-    // CDC delete images against the snapshot-at-start pre-image —
-    // valid at commit BECAUSE the window check proves that pre-image
-    // is still the live truth
-    def stageImages(): Path = {
-      val nonPk = meta0.schema.fieldNames.filterNot(meta0.pk.contains)
-      val images = nonPk.toSeq.flatMap { c =>
-        Seq(col(c).as(s"old_$c"),
-          lit(null).cast(meta0.schema(c).dataType).as(s"new_$c"))
-      }
-      val changes = raw.filter(where)
-        .select(meta0.pk.map(col) ++ (lit("delete").as("op") +: images): _*)
-      val p = new Path(dir, s".staging-changelog-${UUID.randomUUID()}")
-      changes.write.parquet(p.toString)
-      p
-    }
-    val clStaging: Option[Path] = if (cdc) Some(stageImages()) else None
-    var clLate: Option[Path] = None
-    val staging = s"$dir/.staging-deletec-${UUID.randomUUID()}"
-    try {
-      // the expensive rewrite/position job — OUTSIDE the lock
-      if (mor) {
-        readRawPos(spark, warehouse, tableName, meta0, Some(base0),
-            withPos = true)
-          .filter(coalesce(where, lit(false)))
-          .select(col(BucketCol), col(FileCol).as("file"),
-            col(PosCol).as("pos"))
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
-          .write.partitionBy(BucketCol).parquet(staging)
-      } else {
-        toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-          .filter(!coalesce(where, lit(false)))
-          .repartition(touched.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-      }
-      val preStats =
-        if (mor) Map.empty[(Int, String), FileFooter]
-        else stageFileStats(spark, f, staging, statColsTypedOf(meta0))
-      DeleteConcurrentHooks.betweenPhases()
-
-      // ---------------- LOCKED: re-validate, commit ----------------
-      WriteLock.withLockWait(spark, dir, "deleteConcurrent(commit)",
-          commitWaitMs) {
-        val metaLatest = TableMeta.read(spark, dir)
-        val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-        if (baseLatest.buckets != base0.buckets)
-          throw new ConcurrentWriteException(
-            s"bucket count changed ${base0.buckets} -> " +
-            s"${baseLatest.buckets} (concurrent rebucket); staged files " +
-            "use the old layout — retry the delete")
-        if (metaLatest.schema != meta0.schema)
-          throw new ConcurrentWriteException(
-            "table schema changed while this delete staged (the CoW " +
-            "rewrite republished whole buckets under the old schema); " +
-            "retry the delete")
-        def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-          (m.files.getOrElse(b, Nil).map(_.name).toSet,
-            m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-        if (baseLatest.version != base0.version) {
-          val dirty = touched
-            .filter(b => window(base0, b) != window(baseLatest, b))
-          if (dirty.nonEmpty)
-            throw new ConcurrentWriteException(
-              s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-              "since this delete staged (concurrent mutation with an " +
-              "overlapping touched-bucket set); the staged rewrite read " +
-              "a stale pre-image — retry the delete")
-        }
-        if (metaLatest.changelog && clStaging.isEmpty)
-          clLate = Some(stageImages())
-        if (mor)
-          commitStagedDvs(spark, f, dir, data, staging, touched, baseLatest,
-            op = "deleteConcurrent")
-        else
-          commitStaged(spark, f, dir, data, staging, touched,
-            "deleteConcurrent", baseLatest, baseLatest.buckets, metaLatest,
-            removeMissing = true, preStats = Some(preStats))
-        (clStaging orElse clLate).foreach { src =>
-          commitChangelogBatch(f, "deleteConcurrent", src,
-            nextChangelogDst(f, dir))
-        }
-        if (cdc && !metaLatest.changelog)
-          TableMeta.write(spark, dir, metaLatest.copy(changelog = true))
-      }
-      deleted
-    } finally {
-      f.delete(new Path(staging), true)
-      (clStaging.toSeq ++ clLate.toSeq).foreach(p => f.delete(p, true))
-    }
+    val wh = schemaDir(warehouse0, schema)
+    requireTable(spark, wh, tableName, "deleteConcurrent")
+    deleteRows(spark, wh, tableName, where, changelog, mode,
+      "deleteConcurrent", Some(commitWaitMs))
   }
 
-  /** Change-data-capture: with `changelog = true` an upsert also writes,
-    * per incoming row, one (pk…, op, old_<c>…, new_<c>…) record —
-    * op ∈ insert (key absent before) / update (key present, some
-    * INCOMING column's value changed, null-safe) / unchanged — plus,
-    * for every non-PK column `c` of the (evolved) table schema, the
-    * pre-image value `old_<c>` (NULL for inserts) and the post-image
-    * value `new_<c>` (the merged result: incoming value when `c` was
-    * present in the delta, stored value otherwise). The before/after
-    * images are what make the log CONSUMABLE: an incremental aggregate
-    * applies `f(new) − f(old)` per changed row without ever reading the
-    * table (see [[graft.operators.CdcConsumer]]).
-    *
-    * Commit protocol: the batch is MATERIALIZED to a `.staging-changelog-*`
-    * dir before the bucket swap (the classification must join the
-    * pre-image while it still exists) but only RENAMED into
-    * `_changelog/batch=<n>` after the swap commits — a failed upsert
-    * leaves no committed-looking batch recording changes that never
-    * landed. Batch numbers are monotonic under the write lock;
-    * [[readChangelog]] reads them back with the batch column.
-    * Cost: one extra join of the delta against the touched buckets —
-    * proportional to the delta, never the table. Downstream incremental
-    * pipelines (index maintenance, cache invalidation, derived-table
-    * refresh) consume the log instead of diffing 100 TB snapshots. */
   /** Marker column carried through a merge's delta: TRUE = this key's
     * stored row is tombstoned (deleted if present, ignored if absent). */
   private val MergeDelCol = "_graft_merge_del"
 
-  /** `tombstoned = true` (the [[merge]] path): `df` carries
-    * [[MergeDelCol]]; marked rows DELETE their stored match instead of
-    * upserting. Returns (inserted, updated, deleted) — computed only on
-    * the merge path (one extra delta-sized job); (0,0,0) otherwise. */
-  /** `deleteOnlyMatched` (merge path only): SQL MERGE semantics for
-    * tombstones — a WHEN MATCHED DELETE can only ever apply to MATCHED
-    * rows, so an unmatched tombstone row is an ordinary insert
-    * candidate (it reached this commit because an INSERT clause
-    * selected it). The default (false) keeps the programmatic change-
-    * feed contract: an unmatched tombstone is a no-op. */
-  private def upsert(df: DataFrame, warehouse: String, table: String,
+  /** A merge's change feed: the tombstone flag FIRST (over the raw delta
+    * columns — `deleteWhen` may reference feed-only columns), then the
+    * same identifier cleaning as [[toSql]]. */
+  private def mergeFeed(df: DataFrame, deleteWhen: Column): DataFrame =
+    df.columns.foldLeft(df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false)))) {
+      (d, c) =>
+        val cc = Names.cleanName(c)
+        if (cc == c) d else d.withColumnRenamed(c, cc)
+    }
+
+  /** Upsert (and [[merge]]) as one [[WriteTxn]]. Reference upsert
+    * overwrites ONLY the columns present in the incoming frame
+    * (including with NULLs/NaNs); columns absent from it keep their
+    * stored values (sql.py:299; tests/test_sql.py:533 upserts a single
+    * column). One full-outer merge per touched bucket: survivors keep
+    * old rows, matches take incoming values for incoming columns,
+    * inserts take incoming values — a single shuffle, no union. The
+    * touched-bucket window ([[windowCheck]]) is the flip's rule.
+    *
+    * Change-data-capture: with `changelog` (or the table property) the
+    * commit also lands, per incoming row, one (pk…, op, old_<c>…,
+    * new_<c>…) record — op ∈ insert / update (some INCOMING column's
+    * value changed, null-safe) / unchanged (/ delete for a tombstoned
+    * match) — with the pre-image `old_<c>` and post-image `new_<c>` of
+    * every non-PK column: what lets an incremental aggregate apply
+    * `f(new) − f(old)` per changed row without reading the table
+    * ([[graft.operators.CdcConsumer]]). Cost: one join of the delta
+    * against the touched buckets, independent of the staging write, so
+    * the two run side by side.
+    *
+    * `tombstoned` (the merge path): `df` carries [[MergeDelCol]]; marked
+    * rows DELETE their stored match instead of upserting, and feed-only
+    * columns drop. Returns (inserted, updated, deleted) — (0,0,0) for a
+    * plain upsert. `deleteOnlyMatched`: SQL MERGE semantics — a WHEN
+    * MATCHED DELETE only ever applies to MATCHED rows, so an unmatched
+    * tombstone is an ordinary insert candidate; the default keeps the
+    * change-feed contract (an unmatched tombstone is a no-op).
+    * `mode`: merge-on-read eligibility of a merge (see [[merge]]).
+    * `expectedVersion` / `strictVersion`: see [[merge]] and
+    * [[mergeConcurrent]]. */
+  private def upsert(df0: DataFrame, wh: String, table: String,
                      addNewColumns: Boolean, validate: Boolean,
-                     changelog0: Boolean = false,
+                     changelog0: Boolean, op: String, waitMs: Option[Long],
                      tombstoned: Boolean = false,
                      deleteOnlyMatched: Boolean = false,
-                     mode: DeleteMode = DeleteMode.CopyOnWrite): (Long, Long, Long) = {
-    val spark = df.sparkSession
-    val dir = tableDir(warehouse, table)
-    val meta = TableMeta.read(spark, dir)
-    // table-property semantics: once ANY mutation has captured CDC the
-    // meta flag is set and every later mutation captures it too — a
-    // consumer folding the log never misses a write that forgot the flag
-    val changelog = changelog0 || meta.changelog
-    if (meta.autoIndex)
-      throw new StoreException(
-        "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
-
-    // Reference upsert overwrites ONLY the columns present in the
-    // incoming frame (including with NULLs/NaNs); columns absent from it
-    // keep their stored values (sql.py:299 "overwrites ALL VALUES that
-    // are present in source DataFrame"; tests/test_sql.py:533
-    // test_upsert_individual_values2 upserts a single column).
-    val incomingCols = df.columns.toSet - MergeDelCol
-    val (aligned, evolved) = align(df, meta, addNewColumns,
-      passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
-
-    val data = dataDir(warehouse, table)
-    val base = snapshotForWrite(spark, dir, data, meta)
-    val newB = withBucket(aligned, meta.pk, base.buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // validate off the cache — one computation of the delta pipeline;
-      // the same fused job returns the touched buckets (only those are
-      // read or rewritten)
-      val touched = validateAndTouched(newB, meta.pk, validate)
-      // read with the evolved schema: old files yield NULL for new columns
-      val oldTouched = readRawWith(spark, warehouse, table,
-          meta.copy(schema = evolved), manifestOf(base))
-        .filter(col(BucketCol).isin(touched: _*))
-      // checks see the incoming images; merge tombstones are DELETES,
-      // exempt by construction (they remove rows, not write them) —
-      // except under deleteOnlyMatched, where an UNMATCHED tombstone is
-      // an insert candidate and must pass like any other written row
-      enforceChecks(
-        if (!tombstoned) newB
-        else {
-          val keep = newB.filter(!coalesce(col(MergeDelCol), lit(false)))
-          if (!deleteOnlyMatched) keep
-          else keep.unionByName(
-            newB.filter(coalesce(col(MergeDelCol), lit(false)))
+                     mode: DeleteMode = DeleteMode.CopyOnWrite,
+                     expectedVersion: Option[Long] = None,
+                     strictVersion: Boolean = false): (Long, Long, Long) =
+    withTxn(df0.sparkSession, wh, table, op, waitMs) { t =>
+      val spark = t.spark
+      val (meta, base) = (t.meta, t.base)
+      val verb = if (tombstoned) "merge" else "upsert"
+      val label = if (t.locked) verb else op
+      if (meta.autoIndex)
+        throw new StoreException(
+          "Cannot upsert into a table with an automatically generated index (reference: sql.py:177)")
+      // SQL MERGE routing guard: a partial clause shape pre-filters the
+      // feed against a PINNED snapshot's key set; if the table moved
+      // past it, the routing is stale (once pinned == the txn's pin, the
+      // flip's window covers every later movement: feed rows route by
+      // their own PK, whose bucket is by construction touched)
+      expectedVersion.foreach { v =>
+        if (base.version != v)
+          throw new ConcurrentWriteException(
+            s"$label into $table planned against snapshot $v but the " +
+            s"table is now at ${base.version} (concurrent commit since the " +
+            "routing read); table unchanged — retry the merge")
+      }
+      // a merge feed's columns that are neither table columns nor
+      // survivable via addNewColumns existed only to feed the tombstone
+      val df =
+        if (!tombstoned) df0
+        else df0.select(df0.columns.filter(c => c == MergeDelCol ||
+          addNewColumns || meta.schema.fieldNames.contains(c)).map(col)
+          .toIndexedSeq: _*)
+      // table-property semantics: once ANY mutation has captured CDC the
+      // meta flag is set and every later mutation captures it too
+      val changelog = changelog0 || meta.changelog
+      val incomingCols = df.columns.toSet - MergeDelCol
+      val (aligned, evolved) = align(df, meta, addNewColumns,
+        passthrough = if (tombstoned) Set(MergeDelCol) else Set.empty)
+      val newB = withBucket(aligned, meta.pk, base.buckets)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // validate off the cache — one computation of the delta pipeline;
+        // the same fused job returns the touched buckets
+        val touched = validateAndTouched(newB, meta.pk, validate)
+        // read with the evolved schema: old files yield NULL for new columns
+        val oldTouched = readRawWith(spark, wh, table,
+            meta.copy(schema = evolved), manifestOf(base))
+          .filter(col(BucketCol).isin(touched: _*))
+        // checks see the incoming images; merge tombstones are DELETES,
+        // exempt — except under deleteOnlyMatched, where an UNMATCHED
+        // tombstone is an insert candidate. ONE construction, reused by
+        // the flip's enforcement of checks added while this staged.
+        def checkRows: DataFrame =
+          if (!tombstoned) newB
+          else {
+            val isDel = coalesce(col(MergeDelCol), lit(false))
+            val keep = newB.filter(!isDel)
+            if (!deleteOnlyMatched) keep
+            else keep.unionByName(newB.filter(isDel)
               .join(oldTouched.select(meta.pk.map(col): _*),
                 meta.pk.toIndexedSeq, "left_anti"))
-        },
-        meta.checks, if (tombstoned) "merge" else "upsert")
-      // One full-outer merge per touched bucket: survivors keep old rows,
-      // matches take incoming values for incoming columns (old otherwise),
-      // inserts take incoming values; merge's tombstoned matches drop
-      // out. Single shuffle, no union.
-      val marked = newB.withColumn("_graft_new", lit(true))
-      // the target row exists (both join shapes below alias it "o")
-      val presentOld = col(s"o.$BucketCol").isNotNull
-      // incoming row is a tombstone (merge path; never-true otherwise);
-      // under deleteOnlyMatched a tombstone acts only on a MATCHED key —
-      // unmatched it degrades to an ordinary insert (SQL MERGE clauses)
-      val del: Column = {
-        val flag =
-          if (tombstoned) coalesce(col(s"n.$MergeDelCol"), lit(false))
-          else lit(false)
-        if (deleteOnlyMatched) flag && presentOld else flag
-      }
-      val nonPk = evolved.fieldNames.filterNot(meta.pk.contains)
-      val out = oldTouched.as("o")
-        .join(marked.as("n"), meta.pk.toIndexedSeq, "full_outer")
-        .filter(!del)
-        .select(meta.pk.map(col) ++ nonPk.map { c =>
-          val merged =
-            if (incomingCols.contains(c))
-              when(col("n._graft_new").isNotNull, col(s"n.$c")).otherwise(col(s"o.$c"))
-            else col(s"o.$c")
-          merged.as(c)
-        } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
-
-      // Changelog batch: materialized to staging BEFORE the swap (the
-      // classification join needs the pre-image), committed by rename
-      // only AFTER the swap — an upsert that fails mid-commit leaves no
-      // batch directory claiming changes that never landed. The staging
-      // job itself is INDEPENDENT of the data staging write (both read
-      // the live snapshot + the cached delta), so the two writes run
-      // concurrently below (guide §2.6).
-      def stageChangelog(): Option[(Path, Path)] = if (!changelog) None else {
-        val valueCols = incomingCols.toSeq.filterNot(meta.pk.contains).sorted
-        val changedCond = valueCols
-          .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val images = nonPk.toSeq.flatMap { c =>
-          val post = if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
-          // a tombstoned match is a delete: post-image NULL
-          Seq(col(s"o.$c").as(s"old_$c"),
-            when(del, lit(null)).otherwise(post).as(s"new_$c"))
-        }
-        val changes = marked.as("n")
-          .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
-          // a tombstone for an ABSENT key changed nothing — no log row
-          .filter(!(del && !presentOld))
-          .select(meta.pk.map(col) ++ (
-            when(del, lit("delete"))
-              .when(!presentOld, lit("insert"))
-              .when(changedCond, lit("update"))
-              .otherwise(lit("unchanged")).as("op") +: images): _*)
-        Some(stageChangelogBatch(spark, dir, changes))
-      }
-
-      // merge reports what it did. A DEDICATED delta-sized join job is
-      // paid only when the Auto merge-on-read decision needs the
-      // matched count BEFORE the write path is chosen; under an
-      // explicit mode the same three counters ride the staging write
-      // as observe() metrics — one fewer join of the touched buckets.
-      val newRow = col("n._graft_new").isNotNull
-      val statsEarly: Option[(Long, Long, Long)] =
-        if (tombstoned && mode == DeleteMode.Auto && manifestOf(base).isDefined) {
-          val r = marked.as("n")
-            .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
-            .agg(
-              coalesce(sum(when(!del && !presentOld, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(!del && presentOld, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)))
-            .head()
-          Some((r.getLong(0), r.getLong(1), r.getLong(2)))
-        } else None
-      val statsObs: Option[org.apache.spark.sql.Observation] =
-        if (tombstoned && statsEarly.isEmpty)
-          Some(org.apache.spark.sql.Observation())
-        else None
-      def observeStats(j: DataFrame): DataFrame = statsObs match {
-        case None => j
-        case Some(ob) => j.observe(ob,
-          coalesce(sum(when(newRow && !del && !presentOld, 1L).otherwise(0L)), lit(0L)).as("ins"),
-          coalesce(sum(when(newRow && !del && presentOld, 1L).otherwise(0L)), lit(0L)).as("upd"),
-          coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)).as("del"))
-      }
-
-      // merge-on-read eligibility (merge path only): the matched rows
-      // — updates and tombstones — decompose into position deletes +
-      // a delta-sized appended file; inserts are additive anyway. The
-      // shared Auto arithmetic compares |updated + deleted| against
-      // the touched buckets' live rows.
-      val mor = tombstoned && morDecision(manifestOf(base), mode, touched,
-        statsEarly.map(s => s._2 + s._3).getOrElse(0L), "merge", table)
-
-      // Commit: write to staging, move the staged files in, flip the
-      // manifest — one atomic snapshot publish; readers of the
-      // previous snapshot are undisturbed.
-      val f = fs(spark, dir)
-      var clCommit: Option[(Path, Path)] = None
-      try {
-        if (mor) {
-          // delta-driven: one LEFT join of the (delta-sized) change
-          // feed against the touched buckets' position-exposing read —
-          // every matched old row's position tombstones; every
-          // surviving delta row (update post-image or insert) lands in
-          // a NEW file of its bucket. Untouched rows never move.
-          // The join output is delta-sized — persisted, so the DV and
-          // post-image writes both consume ONE compute of it instead
-          // of re-running the join per write (§5 reuse).
-          val oldPos = readRawPos(spark, warehouse, table,
-              meta.copy(schema = evolved), manifestOf(base), withPos = true)
-            .filter(col(BucketCol).isin(touched: _*))
-          val j = marked.as("n")
-            .join(oldPos.as("o"), meta.pk.toIndexedSeq, "left")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val dvStaging = s"$dir/.staging-merge-dv-${UUID.randomUUID()}"
-          val dataStaging = s"$dir/.staging-merge-${UUID.randomUUID()}"
-          try {
-            inParallel(
-              { clCommit = stageChangelog() },
-              {
-                observeStats(j).filter(presentOld)
-                  .select(col(s"o.$BucketCol").as(BucketCol),
-                    col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
-                  .write.partitionBy(BucketCol).parquet(dvStaging)
-                toPhys(j.filter(!del)
-                  .select(meta.pk.map(col) ++ nonPk.toSeq.map { c =>
-                    (if (incomingCols.contains(c)) col(s"n.$c")
-                     else col(s"o.$c")).as(c)
-                  } :+ col(s"n.$BucketCol").as(BucketCol): _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(dataStaging)
-              })
-            commitStagedMorMut(spark, f, dir, data, dataStaging,
-              dvStaging, touched, "upsert", base, meta)
-          } finally {
-            j.unpersist()
-            f.delete(new Path(dvStaging), true)
-            f.delete(new Path(dataStaging), true)
           }
-        } else {
-          val outObs =
-            if (statsObs.isEmpty) out
-            else {
-              // same projection/filter as `out`, with the observe node
-              // between the join and the tombstone filter so all three
-              // counters see every joined row
-              val joined = observeStats(
-                oldTouched.as("o").join(marked.as("n"), meta.pk.toIndexedSeq, "full_outer"))
-              joined.filter(!del)
-                .select(meta.pk.map(col) ++ nonPk.map { c =>
-                  val merged =
-                    if (incomingCols.contains(c))
-                      when(col("n._graft_new").isNotNull, col(s"n.$c")).otherwise(col(s"o.$c"))
-                    else col(s"o.$c")
-                  merged.as(c)
-                } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol")).as(BucketCol): _*)
-            }
-          val staging = s"$dir/.staging-${UUID.randomUUID()}"
-          try {
-            inParallel(
-              { clCommit = stageChangelog() },
-              toPhys(clusterByBucket(outObs, base.buckets, meta.pk), meta)
-                .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(staging))
-            // removeMissing on the merge path: a touched bucket whose rows
-            // ALL tombstoned has no staged replacement and leaves the
-            // snapshot (the delete semantics); plain upserts always stage
-            // every touched bucket
-            commitStaged(spark, f, dir, data, staging, touched, "upsert",
-              base, base.buckets, meta, removeMissing = tombstoned)
-          } finally f.delete(new Path(staging), true)
+        enforceChecks(checkRows, meta.checks, label)
+        val marked = newB.withColumn("_graft_new", lit(true))
+        // the target row exists (both join shapes below alias it "o")
+        val presentOld = col(s"o.$BucketCol").isNotNull
+        val newRow = col("n._graft_new").isNotNull
+        // incoming row is a tombstone (never-true for a plain upsert)
+        val del: Column = {
+          val flag =
+            if (tombstoned) coalesce(col(s"n.$MergeDelCol"), lit(false))
+            else lit(false)
+          if (deleteOnlyMatched) flag && presentOld else flag
         }
-        // data swap done — the changelog batch may now claim it happened
-        clCommit.foreach { case (src, dst) =>
-          commitChangelogBatch(f, "upsert", src, dst)
+        val nonPk = evolved.fieldNames.filterNot(meta.pk.contains)
+        def images(): DataFrame = {
+          val changedCond = incomingCols.toSeq.filterNot(meta.pk.contains).sorted
+            .map(c => !(col(s"n.$c") <=> col(s"o.$c")))
+            .reduceOption(_ || _).getOrElse(lit(false))
+          val imgs = nonPk.toSeq.flatMap { c =>
+            val post = if (incomingCols.contains(c)) col(s"n.$c") else col(s"o.$c")
+            // a tombstoned match is a delete: post-image NULL
+            Seq(col(s"o.$c").as(s"old_$c"),
+              when(del, lit(null)).otherwise(post).as(s"new_$c"))
+          }
+          marked.as("n")
+            .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
+            // a tombstone for an ABSENT key changed nothing — no log row
+            .filter(!(del && !presentOld))
+            .select(meta.pk.map(col) ++ (
+              when(del, lit("delete"))
+                .when(!presentOld, lit("insert"))
+                .when(changedCond, lit("update"))
+                .otherwise(lit("unchanged")).as("op") +: imgs): _*)
         }
-      } finally
-        // no-op when the rename above committed it; removes the phantom
-        // batch when the staging write or the swap threw
-        clCommit.foreach { case (src, _) => f.delete(src, true) }
-      val meta2 = meta.copy(schema = evolved, changelog = changelog)
-      if (meta2 != meta) TableMeta.write(spark, dir, meta2)
-      val stats: (Long, Long, Long) =
+        def stageImages(): Option[Path] =
+          if (changelog) Some(t.stageChangelog(images())) else None
+
+        // merge reports what it did. A DEDICATED delta-sized join job is
+        // paid only when the Auto merge-on-read decision needs the
+        // matched count BEFORE the write path is chosen; otherwise the
+        // same three counters ride the staging write as observe() metrics
+        val statsEarly: Option[(Long, Long, Long)] =
+          if (tombstoned && mode == DeleteMode.Auto && manifestOf(base).isDefined) {
+            val r = marked.as("n")
+              .join(oldTouched.as("o"), meta.pk.toIndexedSeq, "left")
+              .agg(
+                coalesce(sum(when(!del && !presentOld, 1L).otherwise(0L)), lit(0L)),
+                coalesce(sum(when(!del && presentOld, 1L).otherwise(0L)), lit(0L)),
+                coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)))
+              .head()
+            Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+          } else None
+        val statsObs: Option[org.apache.spark.sql.Observation] =
+          if (tombstoned && statsEarly.isEmpty)
+            Some(org.apache.spark.sql.Observation())
+          else None
+        def observeStats(j: DataFrame): DataFrame = statsObs match {
+          case None => j
+          case Some(ob) => j.observe(ob,
+            coalesce(sum(when(newRow && !del && !presentOld, 1L).otherwise(0L)), lit(0L)).as("ins"),
+            coalesce(sum(when(newRow && !del && presentOld, 1L).otherwise(0L)), lit(0L)).as("upd"),
+            coalesce(sum(when(del && presentOld, 1L).otherwise(0L)), lit(0L)).as("del"))
+        }
+
+        // merge-on-read eligibility (merge path only): the matched rows
+        // — updates and tombstones — decompose into position deletes + a
+        // delta-sized appended file; the shared Auto arithmetic compares
+        // |updated + deleted| against the touched buckets' live rows
+        val mor = tombstoned && morDecision(manifestOf(base), mode, touched,
+          statsEarly.map(s => s._2 + s._3).getOrElse(0L), "merge", table)
+        val staging = t.staging(verb)
+        val dvStaging = if (mor) Some(t.staging(s"$verb-dv")) else None
+        val cl: Option[Path] =
+          if (mor) {
+            // delta-driven: one LEFT join of the change feed against the
+            // touched buckets' position-exposing read — every matched old
+            // row's position tombstones; every surviving delta row lands
+            // in a NEW file of its bucket. Delta-sized and persisted, so
+            // the DV and post-image writes share ONE compute of the join
+            val oldPos = readRawPos(spark, wh, table,
+                meta.copy(schema = evolved), manifestOf(base), withPos = true)
+              .filter(col(BucketCol).isin(touched: _*))
+            val j = marked.as("n")
+              .join(oldPos.as("o"), meta.pk.toIndexedSeq, "left")
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try inParallel(spark)(stageImages(), {
+              observeStats(j).filter(presentOld)
+                .select(col(s"o.$BucketCol").as(BucketCol),
+                  col(s"o.$FileCol").as("file"), col(s"o.$PosCol").as("pos"))
+                .repartition(touched.size, col(BucketCol))
+                .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+                .write.partitionBy(BucketCol).parquet(dvStaging.get)
+              toPhys(j.filter(!del)
+                .select(meta.pk.map(col) ++ nonPk.toSeq.map { c =>
+                  (if (incomingCols.contains(c)) col(s"n.$c")
+                   else col(s"o.$c")).as(c)
+                } :+ col(s"n.$BucketCol").as(BucketCol): _*)
+                .repartition(touched.size, col(BucketCol))
+                .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
+                meta)
+                .write.partitionBy(BucketCol).parquet(staging)
+            })._1
+            finally j.unpersist()
+          } else {
+            // the observe node sits between the join and the tombstone
+            // filter so all three counters see every joined row
+            val out = observeStats(oldTouched.as("o")
+                .join(marked.as("n"), meta.pk.toIndexedSeq, "full_outer"))
+              .filter(!del)
+              .select(meta.pk.map(col) ++ nonPk.map { c =>
+                val merged =
+                  if (incomingCols.contains(c))
+                    when(newRow, col(s"n.$c")).otherwise(col(s"o.$c"))
+                  else col(s"o.$c")
+                merged.as(c)
+              } :+ coalesce(col(s"n.$BucketCol"), col(s"o.$BucketCol"))
+                .as(BucketCol): _*)
+            inParallel(spark)(stageImages(),
+              toPhys(clusterByBucket(out, base.buckets, meta.pk), meta)
+                .write.partitionBy(BucketCol).mode(SaveMode.Overwrite)
+                .parquet(staging))._1
+          }
+        t.collectStats(Some(staging), dvStaging)
+        t.flip(if (tombstoned) MergeConcurrentHooks.betweenPhases
+               else UpsertConcurrentHooks.betweenPhases) { (metaL, baseL) =>
+          if (strictVersion && baseL.version != base.version)
+            throw new ConcurrentWriteException(
+              s"table moved ${base.version} -> ${baseL.version} while this " +
+              "merge staged and strict version enforcement is on " +
+              "(full-snapshot-sync merge); retry the merge")
+          windowCheck(base, baseL, touched, s"this $verb", s"retry the $verb")
+          val schema = mergeEvolved(evolved, meta, metaL, verb)
+          // checks added while this staged, AFTER the window validation:
+          // a merge legally evolves schema, so a new check may reference
+          // a column this frame does not carry — a clean conflict (the
+          // retry re-stages against the evolved schema)
+          try enforceChecks(checkRows, metaL.checks -- meta.checks.keySet,
+            s"$label(commit)")
+          catch {
+            case e: org.apache.spark.sql.AnalysisException =>
+              throw new ConcurrentWriteException(
+                s"a CHECK constraint added while this $verb staged " +
+                s"references column(s) this $verb's frame does not carry " +
+                s"(concurrent schema change): ${e.getMessage}; retry the " +
+                verb)
+          }
+          val clSrc = t.changelogAtFlip(cl, metaL)(images())
+          val metaC = metaL.copy(schema = schema)
+          // removeMissing on the merge path: a touched bucket whose rows
+          // ALL tombstoned has no staged replacement and leaves the
+          // snapshot; plain upserts always stage every touched bucket
+          if (mor) t.commit(metaC, baseL, touched, Some(staging), dvStaging, add = true)
+          else t.commit(metaC, baseL, touched, Some(staging), removeMissing = tombstoned)
+          t.commitChangelog(clSrc)
+          val metaFinal = metaL.copy(schema = schema,
+            changelog = changelog || metaL.changelog)
+          if (metaFinal != metaL) TableMeta.write(spark, t.dir, metaFinal)
+        }
         if (!tombstoned) (0L, 0L, 0L)
         else statsEarly.getOrElse {
           val m = statsObs.get.get
           (m("ins").asInstanceOf[Long], m("upd").asInstanceOf[Long],
             m("del").asInstanceOf[Long])
         }
-      stats
-    } finally newB.unpersist()
-  }
+      } finally newB.unpersist()
+    }
 
   /** Compact buckets that have accumulated many small files (each
     * append adds one file per touched bucket — the small-files problem
@@ -3254,146 +2363,58 @@ object KeyedTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The locked-flip conflict rules every optimistic maintenance
-    * rewrite shares ([[ConcurrentWriteException]] → the RETRY loop in
-    * [[retryMaintenance]] re-stages; the table is never corrupted and
-    * ingest never aborts):
-    *  - bucket count changed (a rebucket won the race — staged files
-    *    use the old layout);
-    *  - ANY schema change (the rewrite republished whole buckets under
-    *    the old schema);
-    *  - a TOUCHED bucket whose live file or delete-vector set moved
-    *    since the start snapshot (the staged rewrite read — and its
-    *    commit would drop the DVs of — a pre-image that is no longer
-    *    the truth). Buckets OUTSIDE the touched set carry over
-    *    untouched, so disjoint-bucket ingest and maintenance both
-    *    commit. */
-  private def maintenanceWindowCheck(base0: Manifest, baseLatest: Manifest,
-                                     meta0: TableMeta, metaLatest: TableMeta,
-                                     touched: Seq[Int], op: String): Unit = {
-    if (baseLatest.buckets != base0.buckets)
-      throw new ConcurrentWriteException(
-        s"bucket count changed ${base0.buckets} -> ${baseLatest.buckets} " +
-        s"(concurrent rebucket); $op staged files under the old layout — " +
-        "re-staging")
-    if (metaLatest.schema != meta0.schema)
-      throw new ConcurrentWriteException(
-        s"table schema changed while $op staged (the rewrite republished " +
-        "whole buckets under the old schema) — re-staging")
-    if (baseLatest.version != base0.version) {
-      def window(m: Manifest, b: Int): (Set[String], Set[String]) =
-        (m.files.getOrElse(b, Nil).map(_.name).toSet,
-          m.dvs.getOrElse(b, Nil).map(_.name).toSet)
-      val dirty = touched
-        .filter(b => window(base0, b) != window(baseLatest, b))
-      if (dirty.nonEmpty)
-        throw new ConcurrentWriteException(
-          s"bucket(s) ${dirty.sorted.take(5).mkString(", ")} changed " +
-          s"since $op staged (concurrent mutation with an overlapping " +
-          "touched-bucket set) — re-staging")
-    }
-  }
-
   def compact(spark: SparkSession, warehouse0: String, tableName: String,
               minFiles: Int = 4, schema: Option[String] = None,
-              commitWaitMs: Long = 60000L): Int = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
+              commitWaitMs: Long = 60000L): Int =
+    maintain(spark, schemaDir(warehouse0, schema), tableName, "compact",
+        commitWaitMs) { t =>
+      compactBuckets(t, (0 until t.base.buckets).filter(b =>
+        t.base.files.getOrElse(b, Nil).size >= minFiles))
+    }
+
+  /** Layout maintenance (compact, compactIfNeeded, rebucket) as a
+    * [[WriteTxn]] — a layout rewrite has no logical change, so on a
+    * window conflict it is always the MAINTENANCE that re-stages against
+    * the fresh snapshot ([[retryMaintenance]]); ingest writers never wait
+    * behind it and never abort for it. A legacy pre-manifest table runs
+    * one locked attempt instead (adopting a manifest, so the NEXT call is
+    * optimistic). The txn's manifest op is always `txnOp`. */
+  private def maintain[A](spark: SparkSession, wh: String, table: String,
+                          op: String, commitWaitMs: Long,
+                          txnOp: String = "")(body: WriteTxn => A): A = {
+    val dir = tableDir(wh, table)
+    val commitOp = if (txnOp.isEmpty) op else txnOp
     if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: no snapshot to window against — classic locked
-      // compact (which adopts a manifest, so the NEXT call is optimistic)
-      WriteLock.withLock(spark, dir, "compact") {
-        val meta = TableMeta.read(spark, dir)
-        val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-        val crowded = (0 until base.buckets).filter(b =>
-          base.files.getOrElse(b, Nil).size >= minFiles)
-        compactBuckets(spark, warehouse, tableName, dir, meta, base, crowded)
+      WriteLock.withLock(spark, dir, op)(withTxn(spark, wh, table, commitOp, None)(body))
+    else retryMaintenance(op)(
+      withTxn(spark, wh, table, commitOp, Some(commitWaitMs))(body))
+  }
+
+  /** Rewrite exactly `crowded` buckets to one file each (reading THROUGH
+    * their delete vectors — the commit drops them, materializing the
+    * tombstones): the easiest [[WriteTxn]] client — no logical change,
+    * so the only conflict is [[windowCheck]]'s, and ingest racing an
+    * optimistic compact serializes only on the flip. Returns
+    * #rewritten. */
+  private def compactBuckets(t: WriteTxn, crowded: Seq[Int]): Int =
+    if (crowded.isEmpty) 0
+    else {
+      val staging = t.staging("compact")
+      toPhys(readRawWith(t.spark, t.wh, t.table, t.meta, manifestOf(t.base))
+        .filter(col(BucketCol).isin(crowded: _*))
+        .repartition(crowded.size, col(BucketCol))
+        .sortWithinPartitions((BucketCol +: t.meta.pk).map(col): _*),
+        t.meta)
+        .write.partitionBy(BucketCol).parquet(staging)
+      // the flip must stay a flip even when every bucket was crowded
+      t.collectStats(Some(staging))
+      t.flip(MaintenanceHooks.betweenPhases) { (metaL, baseL) =>
+        windowCheck(t.base, baseL, crowded, "compact", "re-staging",
+          Some((t.meta, metaL)))
+        t.commit(metaL, baseL, crowded, Some(staging))
       }
-    else retryMaintenance("compact") {
-      val meta0 = TableMeta.read(spark, dir)
-      val base0 = Manifest.current(spark, dir).get
-      val crowded = (0 until base0.buckets).filter(b =>
-        base0.files.getOrElse(b, Nil).size >= minFiles)
-      compactBucketsConcurrent(spark, warehouse, tableName, dir, meta0,
-        base0, crowded, commitWaitMs)
-    }
-  }
-
-  /** Rewrite exactly `crowded` buckets to one file each via staging +
-    * per-bucket swap (the upsert commit protocol — readers never see a
-    * half state). Caller holds the write lock (the LEGACY pre-manifest
-    * path; manifested tables go through
-    * [[compactBucketsConcurrent]]). Returns #rewritten. */
-  private def compactBuckets(spark: SparkSession, warehouse: String,
-                             tableName: String, dir: String, meta: TableMeta,
-                             base: Manifest, crowded: Seq[Int]): Int = {
-    if (crowded.isEmpty) 0
-    else {
-      val data = dataDir(warehouse, tableName)
-      val f = fs(spark, dir)
-      val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
-      try {
-        toPhys(readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
-          .filter(col(BucketCol).isin(crowded: _*))
-          .repartition(crowded.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-          meta)
-          .write.partitionBy(BucketCol).parquet(staging)
-        commitStaged(spark, f, dir, data, staging, crowded, "compact",
-          base, base.buckets, meta)
-      } finally f.delete(new Path(staging), true)
       crowded.size
     }
-  }
-
-  /** [[compactBuckets]] WITHOUT holding the write lock for the rewrite
-    * — the [[upsertConcurrent]] bucket-window protocol applied to
-    * layout maintenance (its easiest client: no logical change, so the
-    * only conflict is a touched bucket's file/DV window moving). The
-    * crowded-bucket rewrite (reading THROUGH the buckets' delete
-    * vectors — the commit drops them, materializing the tombstones)
-    * stages against the snapshot-at-start outside the lock; a brief
-    * locked flip re-validates [[maintenanceWindowCheck]] and commits.
-    * Ingest writers racing this compact serialize only on the flip;
-    * on conflict the MAINTENANCE re-stages ([[retryMaintenance]]),
-    * never the ingest. Returns #rewritten. */
-  private def compactBucketsConcurrent(spark: SparkSession, warehouse: String,
-                                       tableName: String, dir: String,
-                                       meta0: TableMeta, base0: Manifest,
-                                       crowded: Seq[Int],
-                                       commitWaitMs: Long): Int = {
-    if (crowded.isEmpty) 0
-    else {
-      val data = dataDir(warehouse, tableName)
-      val f = fs(spark, dir)
-      val staging = s"$dir/.staging-compact-${UUID.randomUUID()}"
-      try {
-        // the rewrite job — OUTSIDE the lock
-        toPhys(readRawWith(spark, warehouse, tableName, meta0, manifestOf(base0))
-          .filter(col(BucketCol).isin(crowded: _*))
-          .repartition(crowded.size, col(BucketCol))
-          .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
-          meta0)
-          .write.partitionBy(BucketCol).parquet(staging)
-        // footer stats of the staged files too — the flip must stay a
-        // flip even when every bucket was crowded
-        val preStats = stageFileStats(spark, f, staging,
-          statColsTypedOf(meta0))
-        MaintenanceHooks.betweenPhases()
-        // ---------------- LOCKED: re-validate, commit ----------------
-        WriteLock.withLockWait(spark, dir, "compact(commit)", commitWaitMs) {
-          val metaLatest = TableMeta.read(spark, dir)
-          val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-          maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
-            crowded, "compact")
-          commitStaged(spark, f, dir, data, staging, crowded, "compact",
-            baseLatest, baseLatest.buckets, metaLatest,
-            preStats = Some(preStats))
-        }
-      } finally f.delete(new Path(staging), true)
-      crowded.size
-    }
-  }
 
   /** #11p auto-compaction policy: the consumer of [[bucketStats]]'s
     * footer-only layout report. Decides per bucket, from metadata alone
@@ -3413,35 +2434,15 @@ object KeyedTable {
                       minAvgRowsPerFile: Long = 0,
                       schema: Option[String] = None,
                       maxDeleteFraction: Double = 0.2,
-                      commitWaitMs: Long = 60000L): Seq[Int] = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: classic locked policy pass (adopts a manifest, so
-      // the NEXT call is optimistic) — breach decision from the
-      // footer-only bucketStats report (no manifest row counts yet)
-      return WriteLock.withLock(spark, dir, "compactIfNeeded") {
-        val meta = TableMeta.read(spark, dir)
-        val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-        val crowded = bucketStats(spark, warehouse0, tableName, schema)
-          .collect().toSeq
-          .filter { r =>
-            val (nf, nr) = (r.getLong(1), r.getLong(2))
-            nf > maxFilesPerBucket ||
-              (nf > 1 && minAvgRowsPerFile > 0 && nr / nf < minAvgRowsPerFile)
-          }
-          .map(_.getInt(0)).sorted
-        compactBuckets(spark, warehouse, tableName, dir, meta, base, crowded)
-        crowded
-      }
+                      commitWaitMs: Long = 60000L): Seq[Int] =
     // OPTIMISTIC policy pass: the breach decision AND the rewrite both
-    // run against the current snapshot outside the lock — the healthy
-    // steady state (nothing crowded) now costs one manifest read and
-    // ZERO lock traffic, which is what lets this ride every streaming
-    // sink epoch without contending with the sink's own committers.
-    retryMaintenance("compactIfNeeded") {
-      val meta = TableMeta.read(spark, dir)
-      val base = Manifest.current(spark, dir).get
+    // run against the pinned snapshot outside the lock — the healthy
+    // steady state (nothing crowded) costs one manifest read and ZERO
+    // lock traffic, which is what lets this ride every streaming sink
+    // epoch without contending with the sink's own committers
+    maintain(spark, schemaDir(warehouse0, schema), tableName,
+        "compactIfNeeded", commitWaitMs, txnOp = "compact") { t =>
+      val base = t.base
       // delete-vector density straight from the manifest (zero IO): a
       // bucket whose tombstoned fraction breaches the bound rewrites —
       // the read-side anti-join cost is bounded BY POLICY, and the
@@ -3480,11 +2481,9 @@ object KeyedTable {
           }
           .map(_.getInt(0))
       val all = (crowded ++ dvCrowded).distinct.sorted
-      compactBucketsConcurrent(spark, warehouse, tableName, dir, meta,
-        base, all, commitWaitMs)
+      compactBuckets(t, all)
       all
     }
-  }
 
   /** Morton (Z-order) value of 2–4 numeric columns: values scale
     * affinely onto [0, 2^bits) against broadcast min/max scalars, then
@@ -3585,7 +2584,7 @@ object KeyedTable {
             op = Some("adopt"))): Unit
       }
     }
-    // OPTIMISTIC rewrite ([[maintenanceWindowCheck]] + retry): the
+    // OPTIMISTIC rewrite ([[windowCheck]] + retry): the
     // min/max aggregate, the Morton sort, and the full bucket rewrite
     // all run against the snapshot-at-start OUTSIDE the lock — a
     // multi-hour Z-order of a 100 TB table is no longer a writer
@@ -3640,8 +2639,8 @@ object KeyedTable {
               commitWaitMs) {
             val metaLatest = TableMeta.read(spark, dir)
             val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-            maintenanceWindowCheck(base0, baseLatest, meta0, metaLatest,
-              touched, "zorderCompact")
+            windowCheck(base0, baseLatest, touched, "zorderCompact",
+              "re-staging", Some((meta0, metaLatest)))
             // Z-ordering makes per-file bounds on the clustered columns
             // tight — exactly when per-column manifest stats pay off.
             // Register them BEFORE the commit records footer stats, so
@@ -3658,9 +2657,8 @@ object KeyedTable {
                 TableMeta.write(spark, dir, m)
                 m
               }
-            commitStaged(spark, f, dir, data, staging, touched,
-              "zorder", baseLatest, baseLatest.buckets, metaStat,
-              preStats = Some(preStats))
+            commitFlip(spark, f, dir, data, "zorder", baseLatest, metaStat,
+              touched, Some(staging), preStats = preStats)
             // full rewrite of every base0 bucket — and any bucket born
             // AFTER the drop was already written post-drop — so dropped
             // names are re-addable again (see dropColumns)
@@ -3682,7 +2680,7 @@ object KeyedTable {
     *    live rows): the matched rows' positions — `(file, row ordinal)`
     *    via `_metadata.row_index` — are written as per-bucket DELETE
     *    VECTOR parquet sidecars and committed in the manifest
-    *    ([[commitStagedDvs]]); no data file is rewritten, so a 1-row
+    *    ([[commitFlip]]); no data file is rewritten, so a 1-row
     *    GDPR erasure in a crowded bucket moves kilobytes, not the
     *    bucket. Reads anti-join the DVs ([[readRawPos]] and the DSv2
     *    scan's in-reader mask); the next rewriting commit of the
@@ -3700,92 +2698,94 @@ object KeyedTable {
              where: Column, schema: Option[String] = None,
              changelog: Boolean = false,
              mode: DeleteMode = DeleteMode.Auto): Long = {
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    WriteLock.withLock(spark, dir, "delete") {
-      val meta = TableMeta.read(spark, dir)
+    val wh = schemaDir(warehouse0, schema)
+    WriteLock.withLock(spark, tableDir(wh, tableName), "delete") {
+      deleteRows(spark, wh, tableName, where, changelog, mode, "delete", None)
+    }
+  }
+
+  /** Arm table-property CDC after a mutation whose caller asked for a
+    * changelog (`meta`: what the flip committed on; with nothing to
+    * commit, the pin — re-read under a short lock when optimistic). */
+  private def armChangelog(t: WriteTxn, meta: TableMeta): Unit =
+    if (!meta.changelog)
+      TableMeta.write(t.spark, t.dir, meta.copy(changelog = true))
+
+  /** [[delete]] / [[deleteConcurrent]] as one [[WriteTxn]]. CDC: deletes
+    * are changes too — one `delete` row per removed row, pre-image in
+    * old_*, new_* all NULL, staged on the pre-image beside the data
+    * staging and renamed in only after the flip. */
+  private def deleteRows(spark: SparkSession, wh: String, table: String,
+                         where: Column, changelog: Boolean, mode: DeleteMode,
+                         op: String, waitMs: Option[Long]): Long =
+    withTxn(spark, wh, table, op, waitMs) { t =>
+      val meta = t.meta
       // meta.changelog (table-property CDC) covers the paths that cannot
-      // express the flag — SQL `DELETE FROM graft.t` reaches here through
-      // KeyedTableSource.deleteWhere with the default
+      // express the flag — SQL `DELETE FROM graft.t` passes the default
       val cdc = changelog || meta.changelog
-      val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-      val raw = readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
+      val raw = readRawWith(spark, wh, table, meta, manifestOf(t.base))
       // one job: matching-row count per touched bucket (≤ buckets rows)
       val probe = raw.filter(where).groupBy(col(BucketCol))
         .agg(count(lit(1)).as("n")).collect()
       val touched = probe.map(_.getInt(0)).toSeq
       val deleted = probe.map(_.getLong(1)).sum
-      // strategy decision from manifest arithmetic alone (zero IO)
-      val mor: Boolean =
-        morDecision(manifestOf(base), mode, touched, deleted,
-          "delete", tableName)
-      if (touched.nonEmpty) {
-        val data = dataDir(warehouse, tableName)
-        val f = fs(spark, dir)
-        // CDC: deletes are changes too — without them a derived
-        // aggregate maintained from the log silently keeps vanished
-        // rows. One `delete` row per removed row, pre-image in old_*,
-        // new_* all NULL; same commit ordering as upsert's batches
-        // (staged on the pre-image, renamed in only after the data
-        // commit — a failed delete leaves no phantom batch).
-        // the changelog batch reads the same live snapshot the staging
-        // write does — the two jobs are independent and overlap (§2.6)
-        var clCommit: Option[(Path, Path)] = None
-        def stageCl(): Unit = if (cdc) {
-          val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains)
-          val images = nonPk.toSeq.flatMap { c =>
-            Seq(col(c).as(s"old_$c"),
-              lit(null).cast(meta.schema(c).dataType).as(s"new_$c"))
-          }
-          val changes = raw.filter(where)
-            .select(meta.pk.map(col) ++ (lit("delete").as("op") +: images): _*)
-          clCommit = Some(stageChangelogBatch(spark, dir, changes))
+      if (touched.isEmpty) {
+        // an explicit changelog request on a no-match delete still arms
+        // table-property CDC for later writers
+        if (cdc && !meta.changelog) t.underLock("cdc-flag") {
+          armChangelog(t, if (t.locked) meta else TableMeta.read(spark, t.dir))
         }
-        val staging = s"$dir/.staging-delete-${UUID.randomUUID()}"
-        try {
-          try {
-            if (mor) {
-              // merge-on-read: stage ONLY the matched rows' physical
-              // positions — one DV parquet per touched bucket, sorted
-              // by (file, pos) so the sidecar compresses and scans
-              // well. The scan re-applies existing DVs (readRawPos),
-              // so positions are never tombstoned twice.
-              inParallel({ stageCl() },
-                readRawPos(spark, warehouse, tableName, meta,
-                    manifestOf(base), withPos = true)
-                  .filter(coalesce(where, lit(false)))
-                  .select(col(BucketCol), col(FileCol).as("file"),
-                    col(PosCol).as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
-                  .write.partitionBy(BucketCol).parquet(staging))
-              commitStagedDvs(spark, f, dir, data, staging, touched, base)
-            } else {
-              // copy-on-write: NULL predicate rows are NOT matches —
-              // keep them (a bare !where would silently drop them)
-              inParallel({ stageCl() },
-                toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-                  .filter(!coalesce(where, lit(false)))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(staging))
-              // removeMissing: a bucket whose rows ALL matched has no
-              // staged replacement — it leaves the new snapshot entirely
-              commitStaged(spark, f, dir, data, staging, touched, "delete",
-                base, base.buckets, meta, removeMissing = true)
-            }
-          } finally f.delete(new Path(staging), true)
-          clCommit.foreach { case (src, dst) =>
-            commitChangelogBatch(f, "delete", src, dst)
-          }
-        } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
+      } else {
+        // strategy decision from manifest arithmetic alone (zero IO)
+        val mor = morDecision(manifestOf(t.base), mode, touched, deleted,
+          "delete", table)
+        def images(): DataFrame = {
+          val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
+          raw.filter(where).select(meta.pk.map(col) ++ (lit("delete").as("op") +:
+            nonPk.flatMap { c =>
+              Seq(col(c).as(s"old_$c"),
+                lit(null).cast(meta.schema(c).dataType).as(s"new_$c"))
+            }): _*)
+        }
+        val staging = t.staging("delete")
+        val (cl, _) = inParallel(spark)(
+          if (cdc) Some(t.stageChangelog(images())) else None,
+          if (mor)
+            // merge-on-read: stage ONLY the matched rows' physical
+            // positions — one DV parquet per touched bucket, sorted by
+            // (file, pos); the scan re-applies existing DVs, so positions
+            // are never tombstoned twice
+            readRawPos(spark, wh, table, meta, manifestOf(t.base), withPos = true)
+              .filter(coalesce(where, lit(false)))
+              .select(col(BucketCol), col(FileCol).as("file"), col(PosCol).as("pos"))
+              .repartition(touched.size, col(BucketCol))
+              .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+              .write.partitionBy(BucketCol).parquet(staging)
+          else
+            // copy-on-write: NULL predicate rows are NOT matches — keep
+            // them (a bare !where would silently drop them)
+            toPhys(raw.filter(col(BucketCol).isin(touched: _*))
+              .filter(!coalesce(where, lit(false)))
+              .repartition(touched.size, col(BucketCol))
+              .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*), meta)
+              .write.partitionBy(BucketCol).parquet(staging))
+        val (dataStaged, dvStaged) =
+          if (mor) (None, Some(staging)) else (Some(staging), None)
+        t.collectStats(dataStaged, dvStaged)
+        t.flip(DeleteConcurrentHooks.betweenPhases) { (metaL, baseL) =>
+          windowCheck(t.base, baseL, touched, "this delete", "retry the delete",
+            Some((meta, metaL)))
+          val clSrc = t.changelogAtFlip(cl, metaL)(images())
+          // removeMissing: a bucket whose rows ALL matched has no staged
+          // replacement — it leaves the new snapshot entirely
+          t.commit(metaL, baseL, touched, dataStaged, dvStaged,
+            removeMissing = !mor)
+          t.commitChangelog(clSrc)
+          if (cdc) armChangelog(t, metaL)
+        }
       }
-      if (cdc && !meta.changelog)
-        TableMeta.write(spark, dir, meta.copy(changelog = true))
       deleted
     }
-  }
 
   /** #11w predicate update: set value columns to new expressions on every
     * row matching `where`, rewriting ONLY the buckets that contain a
@@ -3818,10 +2818,19 @@ object KeyedTable {
              changelog: Boolean = false,
              mode: DeleteMode = DeleteMode.Auto): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    WriteLock.withLock(spark, dir, "update") {
-      val meta = TableMeta.read(spark, dir)
+    val wh = schemaDir(warehouse0, schema)
+    WriteLock.withLock(spark, tableDir(wh, tableName), "update") {
+      updateRows(spark, wh, tableName, where, set, changelog, mode, "update", None)
+    }
+  }
+
+  /** [[update]] / [[updateConcurrent]] as one [[WriteTxn]]. */
+  private def updateRows(spark: SparkSession, wh: String, table: String,
+                         where: Column, set: Map[String, Column],
+                         changelog: Boolean, mode: DeleteMode,
+                         op: String, waitMs: Option[Long]): Long =
+    withTxn(spark, wh, table, op, waitMs) { t =>
+      val meta = t.meta
       set.keys.foreach { c =>
         if (!meta.schema.fieldNames.contains(c))
           throw new StoreException(
@@ -3832,8 +2841,7 @@ object KeyedTable {
             "delete + insert; use merge or delete/append)")
       }
       val cdc = changelog || meta.changelog
-      val base = snapshotForWrite(spark, dir, dataDir(warehouse, tableName), meta)
-      val raw = readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
+      val raw = readRawWith(spark, wh, table, meta, manifestOf(t.base))
       // NULL predicate rows are NOT matches (kept unchanged)
       val matched = coalesce(where, lit(false))
       // one job: matching-row count per touched bucket (≤ buckets rows)
@@ -3841,100 +2849,85 @@ object KeyedTable {
         .agg(count(lit(1)).as("n")).collect()
       val touched = probe.map(_.getInt(0)).toSeq
       val nMatched = probe.map(_.getLong(1)).sum
-      if (touched.nonEmpty) {
-        val data = dataDir(warehouse, tableName)
-        val f = fs(spark, dir)
+      if (touched.isEmpty) {
+        if (cdc && !meta.changelog) t.underLock("cdc-flag") {
+          armChangelog(t, if (t.locked) meta else TableMeta.read(spark, t.dir))
+        }
+      } else {
         // the typed post-image of column c on a matched row
         def newVal(c: String): Column =
           set.get(c).map(_.cast(meta.schema(c).dataType)).getOrElse(col(c))
-        // the changelog batch reads the same live pre-image the staging
-        // writes do — independent jobs, overlapped below (§2.6)
-        var clCommit: Option[(Path, Path)] = None
-        def stageCl(): Unit = if (cdc) {
+        def postImages: DataFrame = raw.filter(matched)
+          .select(meta.schema.fieldNames.toSeq.map(c => newVal(c).as(c)): _*)
+        // the check sees the POST-image of every matched row (one agg job
+        // bounded by the matched set), before anything stages
+        enforceChecks(postImages, meta.checks, op)
+        def images(): DataFrame = {
           val nonPk = meta.schema.fieldNames.filterNot(meta.pk.contains).toSeq
           val changedCond = set.keys.toSeq.sorted
             .map(c => !(newVal(c) <=> col(c)))
             .reduceOption(_ || _).getOrElse(lit(false))
-          val images = nonPk.flatMap { c =>
-            Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c"))
-          }
-          val changes = raw.filter(matched)
-            .select(meta.pk.map(col) ++ (
-              when(changedCond, lit("update"))
-                .otherwise(lit("unchanged")).as("op") +: images): _*)
-          clCommit = Some(stageChangelogBatch(spark, dir, changes))
+          raw.filter(matched).select(meta.pk.map(col) ++ (
+            when(changedCond, lit("update")).otherwise(lit("unchanged")).as("op") +:
+              nonPk.flatMap(c => Seq(col(c).as(s"old_$c"), newVal(c).as(s"new_$c")))): _*)
         }
-        // the check sees the POST-image of every matched row (one agg
-        // job bounded by the matched set), before anything stages
-        enforceChecks(
-          raw.filter(matched).select(meta.schema.fieldNames.toSeq
-            .map(c => newVal(c).as(c)): _*),
-          meta.checks, "update")
-        val mor = morDecision(manifestOf(base), mode, touched, nMatched,
-          "update", tableName)
-        try {
+        def stageImages(): Option[Path] =
+          if (cdc) Some(t.stageChangelog(images())) else None
+        val mor = morDecision(manifestOf(t.base), mode, touched, nMatched,
+          "update", table)
+        val staging = t.staging("update")
+        val dvStaging = if (mor) Some(t.staging("update-dv")) else None
+        def sorted(d: DataFrame): DataFrame =
+          toPhys(d.repartition(touched.size, col(BucketCol))
+            .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*), meta)
+        val cl: Option[Path] =
           if (mor) {
             // merge-on-read: tombstone the matched rows' positions and
-            // append their post-images — moves |matches| rows, never
-            // the buckets. One read of the matched set feeds both
-            // staged writes (persisted: the filter job runs once).
-            val posFrame = readRawPos(spark, warehouse, tableName, meta,
-                manifestOf(base), withPos = true)
+            // append their post-images — moves |matches| rows, never the
+            // buckets. One read of the matched set feeds both staged
+            // writes (persisted: the filter job runs once).
+            val posFrame = readRawPos(spark, wh, table, meta,
+                manifestOf(t.base), withPos = true)
               .filter(matched)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val dvStaging = s"$dir/.staging-update-dv-${UUID.randomUUID()}"
-            val dataStaging = s"$dir/.staging-update-${UUID.randomUUID()}"
-            try {
-              inParallel({ stageCl() }, {
-                posFrame
-                  .select(col(BucketCol), col(FileCol).as("file"),
-                    col(PosCol).as("pos"))
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
-                  .write.partitionBy(BucketCol).parquet(dvStaging)
-                toPhys(posFrame
-                  .select(meta.schema.fieldNames.toSeq
-                    .map(c => newVal(c).as(c)) :+ col(BucketCol): _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(dataStaging)
-              })
-              commitStagedMorMut(spark, f, dir, data, dataStaging,
-                dvStaging, touched, "update", base, meta)
-            } finally {
-              posFrame.unpersist()
-              f.delete(new Path(dvStaging), true)
-              f.delete(new Path(dataStaging), true)
-            }
+            try inParallel(spark)(stageImages(), {
+              posFrame
+                .select(col(BucketCol), col(FileCol).as("file"), col(PosCol).as("pos"))
+                .repartition(touched.size, col(BucketCol))
+                .sortWithinPartitions(col(BucketCol), col("file"), col("pos"))
+                .write.partitionBy(BucketCol).parquet(dvStaging.get)
+              sorted(posFrame.select(meta.schema.fieldNames.toSeq
+                  .map(c => newVal(c).as(c)) :+ col(BucketCol): _*))
+                .write.partitionBy(BucketCol).parquet(staging)
+            })._1
+            finally posFrame.unpersist()
           } else {
-            val staging = s"$dir/.staging-update-${UUID.randomUUID()}"
-            try {
-              val rewritten = meta.schema.fieldNames.toSeq.map { c =>
-                (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
-                 else col(c)).as(c)
-              } :+ col(BucketCol)
-              inParallel({ stageCl() },
-                toPhys(raw.filter(col(BucketCol).isin(touched: _*))
-                  .select(rewritten: _*)
-                  .repartition(touched.size, col(BucketCol))
-                  .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-                  meta)
-                  .write.partitionBy(BucketCol).parquet(staging))
-              commitStaged(spark, f, dir, data, staging, touched, "update",
-                base, base.buckets, meta)
-            } finally f.delete(new Path(staging), true)
+            val rewritten = meta.schema.fieldNames.toSeq.map { c =>
+              (if (set.contains(c)) when(matched, newVal(c)).otherwise(col(c))
+               else col(c)).as(c)
+            } :+ col(BucketCol)
+            inParallel(spark)(stageImages(),
+              sorted(raw.filter(col(BucketCol).isin(touched: _*)).select(rewritten: _*))
+                .write.partitionBy(BucketCol).parquet(staging))._1
           }
-          clCommit.foreach { case (src, dst) =>
-            commitChangelogBatch(f, "update", src, dst)
-          }
-        } finally clCommit.foreach { case (src, _) => f.delete(src, true) }
+        t.collectStats(Some(staging), dvStaging)
+        t.flip(UpdateConcurrentHooks.betweenPhases) { (metaL, baseL) =>
+          windowCheck(t.base, baseL, touched, "this update", "retry the update",
+            Some((meta, metaL)))
+          // a CHECK registered while this staged lives in TableMeta, so
+          // neither the window nor the schema rule catches it — enforce
+          // the delta on the post-images; with the schema proven
+          // unchanged it can only reference columns this frame carries
+          enforceChecks(postImages, metaL.checks -- meta.checks.keySet,
+            s"$op(commit)")
+          val clSrc = t.changelogAtFlip(cl, metaL)(images())
+          t.commit(metaL, baseL, touched, Some(staging), dvStaging, add = mor)
+          t.commitChangelog(clSrc)
+          if (cdc) armChangelog(t, metaL)
+        }
       }
-      if (cdc && !meta.changelog)
-        TableMeta.write(spark, dir, meta.copy(changelog = true))
       nMatched
     }
-  }
 
   /** #11aa metadata-only column DROP — the inverse of `addNewColumns`
     * evolution: the column leaves the logical schema (reads project
@@ -4278,43 +3271,17 @@ object KeyedTable {
             mode: DeleteMode = DeleteMode.Auto): (Long, Long, Long) = {
     val wh = schemaDir(warehouse0, schema)
     val spark = df.sparkSession
-    if (strictUtc) {
-      val naive = df.schema.fields.filter(_.dataType == TimestampNTZType)
-      if (naive.nonEmpty)
-        throw new StoreException(
-          s"Column(s) ${naive.map(_.name).mkString(", ")} timezone must be set " +
-          "(naive TimestampNTZ rejected; convert to a UTC instant, or pass " +
-          "strictUtc=false to pin the wall-clock to UTC) (reference: sql.py:133)")
-    }
-    // tombstone flag FIRST (over the raw delta columns), then the same
-    // identifier cleaning as toSql; columns not in the table schema are
-    // fine inside `deleteWhen` but are not carried into the table
-    val flagged = df.withColumn(MergeDelCol, coalesce(deleteWhen, lit(false)))
-    val cleaned = df.columns.foldLeft(flagged) { (d, c) =>
-      val cc = Names.cleanName(c)
-      if (cc == c) d else d.withColumnRenamed(c, cc)
-    }
-    // drop delta columns that are neither table columns nor survivable
-    // via addNewColumns — they existed only to feed the tombstone flag
+    if (strictUtc) rejectNaive(df)
+    val feed = mergeFeed(df, deleteWhen)
     val dir = tableDir(wh, tableName)
     WriteLock.withLock(spark, dir, "merge") {
       if (!TableMeta.exists(spark, dir))
         throw new StoreException(
           s"merge target $tableName does not exist (create it with toSql first)")
-      expectedVersion.foreach { v =>
-        val cur = Manifest.current(spark, dir).map(_.version).getOrElse(-1L)
-        if (cur != v)
-          throw new ConcurrentWriteException(
-            s"merge into $tableName planned against snapshot $v but the " +
-            s"table is now at $cur (concurrent commit since the routing " +
-            "read); table unchanged — retry the merge")
-      }
-      val meta = TableMeta.read(spark, dir)
-      val keep = cleaned.columns.filter(c =>
-        c == MergeDelCol || addNewColumns || meta.schema.fieldNames.contains(c))
-      upsert(cleaned.select(keep.map(col).toIndexedSeq: _*), wh, tableName,
-        addNewColumns, validate, changelog, tombstoned = true,
-        deleteOnlyMatched = deleteOnlyMatched, mode = mode)
+      upsert(feed, wh, tableName, addNewColumns, validate, changelog,
+        "upsert", None, tombstoned = true,
+        deleteOnlyMatched = deleteOnlyMatched, mode = mode,
+        expectedVersion = expectedVersion)
     }
   }
 
@@ -4332,136 +3299,69 @@ object KeyedTable {
                newBuckets: Int, schema: Option[String] = None,
                commitWaitMs: Long = 60000L): Unit = {
     require(newBuckets > 0, s"bucket count must be positive, got $newBuckets")
-    val warehouse = schemaDir(warehouse0, schema)
-    val dir = tableDir(warehouse, tableName)
-    if (Manifest.current(spark, dir).isEmpty)
-      // legacy table: classic locked rebucket (adopts a manifest)
-      return WriteLock.withLock(spark, dir, "rebucket") {
-        rebucketLocked(spark, warehouse, tableName, newBuckets, dir)
-      }
     // OPTIMISTIC rebucket: rehashing moves every row, so the conflict
-    // window is necessarily COARSE — any manifest flip between the
-    // start snapshot and the commit invalidates the staged layout (the
-    // staged buckets were derived from every old bucket at once). But
-    // the expensive part — the full shuffle + rewrite — still stages
-    // OUTSIDE the lock: writers keep committing while the rebucket
-    // runs, and it is the REBUCKET that re-stages on conflict
-    // ([[retryMaintenance]]), never the ingest. On a table too hot for
-    // the shuffle to ever land, the bounded retries surface the
-    // contention loudly — quiesce writers (or schedule the rebucket
-    // into a low-traffic window) rather than silently stalling them
-    // for the job's duration, which is what the old full-lock design
-    // did by default.
-    retryMaintenance("rebucket") {
-      val meta0 = TableMeta.read(spark, dir)
-      val data = dataDir(warehouse, tableName)
-      val base0 = Manifest.current(spark, dir).get
-      if (base0.buckets == newBuckets) {
+    // window is necessarily COARSE — any manifest flip between the pin
+    // and the commit invalidates the staged layout (the staged buckets
+    // were derived from every old bucket at once). But the expensive
+    // part — the full shuffle + rewrite — still stages OUTSIDE the
+    // lock: writers keep committing while the rebucket runs, and it is
+    // the REBUCKET that re-stages on conflict, never the ingest. On a
+    // table too hot for the shuffle to ever land, the bounded retries
+    // surface the contention loudly — quiesce writers (or schedule the
+    // rebucket into a low-traffic window) rather than silently stalling
+    // them for the job's duration.
+    maintain(spark, schemaDir(warehouse0, schema), tableName, "rebucket",
+        commitWaitMs) { t =>
+      if (t.base.buckets == newBuckets) {
         // keep meta honest if it lags the manifest (crash between a
         // prior rebucket's manifest flip and its meta write)
-        if (meta0.buckets != newBuckets)
-          WriteLock.withLockWait(spark, dir, "rebucket(meta)",
-              commitWaitMs) {
-            val m = TableMeta.read(spark, dir)
+        if (t.meta.buckets != newBuckets)
+          t.underLock("meta") {
+            val m = TableMeta.read(spark, t.dir)
             if (m.buckets != newBuckets)
-              TableMeta.write(spark, dir, m.copy(buckets = newBuckets))
+              TableMeta.write(spark, t.dir, m.copy(buckets = newBuckets))
           }
       } else {
-        val f = fs(spark, dir)
-        val staging = s"$dir/.staging-rebucket-${UUID.randomUUID()}"
-        try {
-          // the full shuffle + rewrite — OUTSIDE the lock
-          toPhys(withBucket(
-              readRawWith(spark, warehouse, tableName, meta0, Some(base0))
-                .drop(BucketCol),
-              meta0.pk, newBuckets)
-            .repartition(newBuckets, col(BucketCol))
-            .sortWithinPartitions((BucketCol +: meta0.pk).map(col): _*),
-            meta0)
-            .write.partitionBy(BucketCol).parquet(staging)
-          // a rebucket stages EVERY row — its footer stats must not be
-          // paid inside the flip (see stageFileStats)
-          val preStats = stageFileStats(spark, f, staging,
-            statColsTypedOf(meta0))
-          MaintenanceHooks.betweenPhases()
-          // -------------- LOCKED: re-validate, commit --------------
-          WriteLock.withLockWait(spark, dir, "rebucket(commit)",
-              commitWaitMs) {
-            val metaLatest = TableMeta.read(spark, dir)
-            val baseLatest = snapshotForWrite(spark, dir, data, metaLatest)
-            if (baseLatest.version != base0.version)
-              throw new ConcurrentWriteException(
-                s"table advanced v${base0.version} -> v${baseLatest.version} " +
-                "while the rebucket staged (a rebucket touches every " +
-                "bucket, so ANY concurrent commit invalidates it) — " +
-                "re-staging")
-            if (metaLatest.schema != meta0.schema)
-              throw new ConcurrentWriteException(
-                "table schema changed while the rebucket staged (the " +
-                "rewrite republished every bucket under the old schema) " +
-                "— re-staging")
-            // ONE snapshot flip switches both the file set and the
-            // bucket count (the manifest carries `buckets`), so no
-            // reader can ever pair the old count with the new layout.
-            // Old-layout buckets with no staged replacement
-            // (newBuckets < old) leave the snapshot via removeMissing;
-            // the old files stay for readers of previous snapshots
-            // until vacuum. Meta updates after, as the mirror legacy
-            // (pre-manifest) code paths read.
-            commitStaged(spark, f, dir, data, staging,
-              0 until math.max(base0.buckets, newBuckets), "rebucket",
-              baseLatest, newBuckets, metaLatest, removeMissing = true,
-              preStats = Some(preStats))
-            // a full rewrite: every live file now carries the current
-            // schema, so dropped names may be re-added safely
-            TableMeta.write(spark, dir,
-              metaLatest.copy(buckets = newBuckets, dropped = Nil))
-          }
-        } finally f.delete(new Path(staging), true)
+        val staging = t.staging("rebucket")
+        toPhys(withBucket(
+            readRawWith(spark, t.wh, tableName, t.meta, manifestOf(t.base))
+              .drop(BucketCol),
+            t.meta.pk, newBuckets)
+          .repartition(newBuckets, col(BucketCol))
+          .sortWithinPartitions((BucketCol +: t.meta.pk).map(col): _*),
+          t.meta)
+          .write.partitionBy(BucketCol).parquet(staging)
+        // a rebucket stages EVERY row — its footer stats must not be
+        // paid inside the flip (see stageFileStats)
+        t.collectStats(Some(staging))
+        t.flip(MaintenanceHooks.betweenPhases) { (metaL, baseL) =>
+          if (baseL.version != t.base.version)
+            throw new ConcurrentWriteException(
+              s"table advanced v${t.base.version} -> v${baseL.version} " +
+              "while the rebucket staged (a rebucket touches every " +
+              "bucket, so ANY concurrent commit invalidates it) — " +
+              "re-staging")
+          if (metaL.schema != t.meta.schema)
+            throw new ConcurrentWriteException(
+              "table schema changed while the rebucket staged (the " +
+              "rewrite republished every bucket under the old schema) " +
+              "— re-staging")
+          // ONE snapshot flip switches both the file set and the bucket
+          // count (the manifest carries `buckets`), so no reader can ever
+          // pair the old count with the new layout. Old-layout buckets
+          // with no staged replacement (newBuckets < old) leave the
+          // snapshot via removeMissing; the old files stay for readers of
+          // previous snapshots until vacuum. Meta updates after, as the
+          // mirror legacy (pre-manifest) code paths read.
+          t.commit(metaL, baseL, 0 until math.max(t.base.buckets, newBuckets),
+            Some(staging), removeMissing = true, newBuckets = Some(newBuckets))
+          // a full rewrite: every live file now carries the current
+          // schema, so dropped names may be re-added safely
+          TableMeta.write(spark, t.dir,
+            metaL.copy(buckets = newBuckets, dropped = Nil))
+        }
       }
     }
-  }
-
-  private def rebucketLocked(spark: SparkSession, warehouse: String,
-                             tableName: String, newBuckets: Int,
-                             dir: String): Unit = {
-    val meta = TableMeta.read(spark, dir)
-    val data = dataDir(warehouse, tableName)
-    val base = snapshotForWrite(spark, dir, data, meta)
-    if (base.buckets == newBuckets) {
-      // keep meta honest if it lags the manifest (crash between a prior
-      // rebucket's manifest flip and its meta write)
-      if (meta.buckets != newBuckets)
-        TableMeta.write(spark, dir, meta.copy(buckets = newBuckets))
-      return
-    }
-    val f = fs(spark, dir)
-    val staging = s"$dir/.staging-rebucket-${UUID.randomUUID()}"
-    try {
-      toPhys(withBucket(
-          readRawWith(spark, warehouse, tableName, meta, manifestOf(base))
-            .drop(BucketCol),
-          meta.pk, newBuckets)
-        .repartition(newBuckets, col(BucketCol))
-        .sortWithinPartitions((BucketCol +: meta.pk).map(col): _*),
-        meta)
-        .write.partitionBy(BucketCol).parquet(staging)
-      // ONE snapshot flip switches both the file set and the bucket
-      // count (the manifest carries `buckets`), so no reader can ever
-      // pair the old count with the new layout — the failure mode the
-      // old dir-swap ordering had to reason about. Old-layout buckets
-      // with no staged replacement (newBuckets < old) leave the
-      // snapshot via removeMissing; the old files stay for readers of
-      // previous snapshots until vacuum. Meta updates after, as the
-      // mirror legacy (pre-manifest) code paths read.
-      commitStaged(spark, f, dir, data, staging,
-        0 until math.max(base.buckets, newBuckets), "rebucket",
-        base, newBuckets, meta, removeMissing = true)
-      // a full rewrite: every live file now carries the current schema,
-      // so dropped column names may be re-added safely (see dropColumns)
-      TableMeta.write(spark, dir,
-        meta.copy(buckets = newBuckets, dropped = Nil))
-    } finally f.delete(new Path(staging), true)
   }
 
   /** Reclaim a table's garbage, bounded by `olderThanMs` (default 24 h)
@@ -4528,7 +3428,7 @@ object KeyedTable {
     // predicted-expired but actually protected by a tag/branch added
     // meanwhile) re-protects its references; the candidate set only
     // ever SHRINKS inside the lock. Data files move into bucket dirs
-    // only under the lock (commitStaged), so no candidate can become
+    // only under the lock (commitFlip), so no candidate can become
     // live invisibly between the walk and the flip.
     val preCutoff = System.currentTimeMillis() - olderThanMs
     val preWalk: Option[(Set[(String, Long)], Seq[(String, Path)], Seq[Path])] =

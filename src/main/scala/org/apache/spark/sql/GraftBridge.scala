@@ -31,4 +31,11 @@ object GraftBridge {
       : org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.SerializableConfiguration] =
     org.apache.spark.util.SerializableConfiguration.broadcast(sc, conf)
+
+  /** Wait (bounded) until the listener bus has delivered every posted
+    * event, so the status tracker is current (`listenerBus` is
+    * `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    try sc.listenerBus.waitUntilEmpty()
+    catch { case _: java.util.concurrent.TimeoutException => }
 }
